@@ -1,5 +1,6 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
+import graft.util.HostTelemetry
 
 /** Accumulates executor task metrics across the whole session — the
   * per-query SHUFFLE/SPILL accounting ("measure, don't guess": seconds
@@ -41,16 +42,10 @@ object Bench {
     // Co-tenant baseline BEFORE this process creates any load of its own
     // (the sweep-start sample below runs after warm-up, whose load is
     // ours): loadavg at entry is the cleanest external-demand signal.
-    val loadAtEntry =
-      try scala.io.Source.fromFile("/proc/loadavg").mkString.trim
-        .split("\\s+").take(3).toSeq.map(_.toDouble)
-      catch { case _: Throwable => Seq.empty[Double] }
+    val loadAtEntry = HostTelemetry.loadavg()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+    val spark = GraftSession.builder(cpus)
       // AQE partition coalescing stays at its defaults (parallelismFirst):
       // measured at sf0.1/local[32], size-based coalescing
       // (parallelismFirst=false) collapsed the shingle self-joins — small
@@ -58,9 +53,6 @@ object Bench {
       // +60% total. The round-1 "32 cores slower than 8" regression was
       // lazy-cache double computation (fixed in util.Views.materialize),
       // not partition-count overhead.
-      // events.parquet carries INT64 TIMESTAMP(NANOS); read as BIGINT nanos
-      // (session-level so no reader mutates conf mid-query — SPARK-40819).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // Executor-side shuffle files are only removed when the
       // ContextCleaner sees their driver-side handles GC'd; without any
       // forced GC a long session accumulates /tmp shuffle data into
@@ -77,8 +69,6 @@ object Bench {
       // minutes, not seconds.
       .config("spark.cleaner.periodicGC.interval",
         sys.env.getOrElse("SPARK_GRAFT_PERIODIC_GC", "30min"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Optional comma-separated filter for fast iteration on one query.
@@ -132,16 +122,7 @@ object Bench {
     // flatness after the fact; sampling /proc at sweep start/end puts the
     // evidence IN the artifact — loadavg carries other processes' runnable
     // demand, the cpu line's steal field carries hypervisor preemption.
-    def loadavg(): Seq[Double] =
-      try scala.io.Source.fromFile("/proc/loadavg").mkString.trim
-        .split("\\s+").take(3).toSeq.map(_.toDouble)
-      catch { case _: Throwable => Seq.empty }
-    def cpuLine(): Seq[Long] =
-      try scala.io.Source.fromFile("/proc/stat").getLines()
-        .find(_.startsWith("cpu ")).map(_.trim.split("\\s+").drop(1)
-          .toSeq.map(_.toLong)).getOrElse(Seq.empty)
-      catch { case _: Throwable => Seq.empty }
-    val (load0, cpu0) = (loadavg(), cpuLine())
+    val (load0, cpu0) = (HostTelemetry.loadavg(), HostTelemetry.cpuLine())
     // Timed reps must PROBE stored artifacts, never build them — assert it.
     val buildsBeforeTiming = graft.util.Artifacts.builds.get
     var lastRows = 0L // result cardinality for the reference-format report
@@ -205,16 +186,9 @@ object Bench {
     val timedBuilds = graft.util.Artifacts.builds.get - buildsBeforeTiming
     if (timedBuilds > 0)
       System.err.println(s"[bench] WARNING: $timedBuilds stored-artifact build(s) inside timed reps")
-    val (load1, cpu1) = (loadavg(), cpuLine())
-    // steal = field 8 of the aggregate cpu line (user nice system idle
-    // iowait irq softirq STEAL); pct over the sweep's total jiffies.
-    val stealPct =
-      if (cpu0.length >= 8 && cpu1.length >= 8 && cpu1.sum > cpu0.sum)
-        (cpu1(7) - cpu0(7)).toDouble / (cpu1.sum - cpu0.sum) * 100
-      else -1.0
-    def loadArr(l: Seq[Double]) = l.map(v => f"$v%.2f").mkString("[", ",", "]")
-    val hostJson =
-      s"""{"cpus":${Runtime.getRuntime.availableProcessors()},"loadavg_entry":${loadArr(loadAtEntry)},"loadavg_start":${loadArr(load0)},"loadavg_end":${loadArr(load1)},"steal_pct":${f"$stealPct%.3f"}}"""
+    val hostJson = HostTelemetry.json(load0, cpu0,
+      HostTelemetry.loadavg(), HostTelemetry.cpuLine(),
+      Some(loadAtEntry))
     val json =
       s"""{"metric":"total","value":$total,"unit":"sec","failed":$failed,"reps":$reps,"timed_artifact_builds":$timedBuilds,"host":$hostJson,"queries":$qs,"samples":$ss,"shuffle_mb":${mbMap(_._4)},"spill_mb":${mbMap(_._5)},"shuffle_mb_samples":${sampleMap(_._2)},"spill_mb_samples":${sampleMap(_._3)},"sf":"$sfDir"}"""
     // The FULL artifact goes to a file (at 330+ queries it is ~70 KB —

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Isolated A/B harness for the stored-LSH-index PROBE shape at small
@@ -34,14 +33,7 @@ object ProbeBench {
     require(mod % 10 == 0, "batch modulus must be a multiple of 10 so the " +
       "batch stays inside the standard index's held-out id space")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val metrics = new TaskMetricsListener
     spark.sparkContext.addSparkListener(metrics)

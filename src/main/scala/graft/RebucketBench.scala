@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Isolated A/B for the bucketed tier's SMALL-FILE MAINTENANCE (round
@@ -24,14 +23,7 @@ object RebucketBench {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val chunks = sys.env.getOrElse("SPARK_GRAFT_APPEND_CHUNKS", "16").toInt
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val docs = dedup.Dedup.augmented(Sources.documents(spark, sfDir))

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** ANN retrieval-quality gate for the STORED serving tiers at scale —
@@ -36,14 +36,7 @@ object RecallBench {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val k = sys.env.getOrElse("SPARK_GRAFT_RECALL_K", "10").toInt
     val qmod = sys.env.getOrElse("SPARK_GRAFT_RECALL_QMOD", "997").toLong
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val (load0, cpu0) = (util.HostTelemetry.loadavg(), util.HostTelemetry.cpuLine())
 

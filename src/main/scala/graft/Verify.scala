@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,18 +9,10 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     val only = args.drop(2).toSet
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // events.parquet carries INT64 TIMESTAMP(NANOS); read as BIGINT nanos
-      // (session-level so no reader mutates conf mid-query — SPARK-40819).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val spark = GraftSession.builder(cpus)
       // Release shuffle files promptly in a long many-query session (see
       // Bench.scala — same hygiene, same reason).
       .config("spark.cleaner.periodicGC.interval", "30s")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()

@@ -10,13 +10,10 @@ import org.apache.spark.sql.types.IntegerType
   * `SparkSessionExtensions` is the sanctioned way to extend the engine —
   * no fork, no reflection into the registry).
   *
-  * Register via config:
-  * {{{
-  *   SparkSession.builder()
-  *     .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-  * }}}
-  * or `.withExtensions(new GraftExtensions)`. After that the functions are
-  * first-class in SQL:
+  * Register via config (`spark.sql.extensions` =
+  * `graft.functions.GraftExtensions`) or `.withExtensions(new
+  * GraftExtensions)` on a session builder, as [[graft.GraftSession]]
+  * does. After that the functions are first-class in SQL:
   * {{{
   *   SELECT word_shingles(text, 3)  FROM documents
   *   SELECT sign_sketch(vec, 64)    FROM embeddings

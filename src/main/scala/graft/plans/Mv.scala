@@ -1,14 +1,12 @@
 package graft.plans
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Materialized-view lifecycle: write-once rollup builds (the marker
-  * discipline shared with the stored LSH/IVF artifacts — testdata is
-  * immutable per driver contract, so `(sfDir, grain, version)` identifies
-  * the content) and the incremental day-delta refresh that keeps a
-  * day-grain MV current without rescanning history.
+/** Materialized-view lifecycle: write-once rollup builds (stored
+  * artifacts, see [[graft.util.Artifacts.ensure]]) and the incremental
+  * day-delta refresh that keeps a day-grain MV current without
+  * rescanning history.
   *
   * Scale shape: the MV build scans the fact ONCE per ingest batch and
   * every steady-state aggregate query reads `|MV|` rows via
@@ -19,28 +17,8 @@ import org.apache.spark.sql.functions._
   * a day; dashboards hit kilobytes.
   */
 object Mv {
-  private def warehouseDir(s: SparkSession, leaf: String): Path =
-    new Path(s.conf.get("spark.sql.warehouse.dir"), leaf)
-
-  private def sfTag(dir: String): String = dir.replaceAll("[^A-Za-z0-9.]", "_")
-
-  /** Returns the marker's content if it matches `tag`'s prefix (the tail
-    * may carry build-time metadata like the refresh cutoff). */
-  private def readMarker(s: SparkSession, out: Path): Option[String] = {
-    val fs = out.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val marker = new Path(out, "_GRAFT_MARKER")
-    if (!fs.exists(marker)) None
-    else {
-      val in = fs.open(marker)
-      try Some(new String(in.readAllBytes(), "UTF-8")) finally in.close()
-    }
-  }
-
-  private def writeMarker(s: SparkSession, out: Path, content: String): Unit = {
-    val fs = out.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val os = fs.create(new Path(out, "_GRAFT_MARKER"), true)
-    try os.write(content.getBytes("UTF-8")) finally os.close()
-  }
+  import graft.util.Artifacts
+  import graft.util.Artifacts.sfTag
 
   /** Lineitem rollup MV at (l_returnflag, l_linestatus) grain with
     * exact-decimal partial sums, count, and shipdate min/max — the state
@@ -48,10 +26,8 @@ object Mv {
     * over any grain subset. Build is write-once per SF; every call
     * (re)registers the definition (idempotent). */
   def ensureLineitemMv(s: SparkSession, dir: String): MvDef = {
-    val out = warehouseDir(s, s"graft_mv_lineitem_${sfTag(dir)}")
-    val tag = s"$dir|lineitem|rf,ls|v1"
-    if (!readMarker(s, out).contains(tag)) {
-      graft.util.Artifacts.recordBuild(s"mv_lineitem $tag")
+    val out = Artifacts.inWarehouse(s, s"graft_mv_lineitem_${sfTag(dir)}")
+    Artifacts.ensure(s, out, s"$dir|lineitem|rf,ls|v1") {
       graft.Sources.lineitem(s, dir)
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
@@ -60,8 +36,7 @@ object Mv {
           count(lit(1)).as("cnt"),
           min(col("l_shipdate")).as("min_ship"),
           max(col("l_shipdate")).as("max_ship"))
-        .write.mode("overwrite").parquet(out.toString)
-      writeMarker(s, out, tag)
+        .write.parquet(out.toString)
     }
     val d = MvDef(
       name = s"lineitem_rf_ls_${sfTag(dir)}",
@@ -84,18 +59,15 @@ object Mv {
     * l_suppkey present) is TPC-H referential integrity, guaranteed by
     * the fixture generator. */
   def ensureLineitemSuppMv(s: SparkSession, dir: String): MvDef = {
-    val out = warehouseDir(s, s"graft_mv_lineitem_supp_${sfTag(dir)}")
-    val tag = s"$dir|lineitem|rf,suppkey|v1"
-    if (!readMarker(s, out).contains(tag)) {
-      graft.util.Artifacts.recordBuild(s"mv_lineitem_supp $tag")
+    val out = Artifacts.inWarehouse(s, s"graft_mv_lineitem_supp_${sfTag(dir)}")
+    Artifacts.ensure(s, out, s"$dir|lineitem|rf,suppkey|v1") {
       graft.Sources.lineitem(s, dir)
         .groupBy("l_returnflag", "l_suppkey")
         .agg(
           sum(graft.util.Stable.dec2(col("l_quantity"))).as("sum_qty"),
           sum(graft.util.Stable.dec2(col("l_extendedprice"))).as("sum_price"),
           count(lit(1)).as("cnt"))
-        .write.mode("overwrite").parquet(out.toString)
-      writeMarker(s, out, tag)
+        .write.parquet(out.toString)
     }
     val d = MvDef(
       name = s"lineitem_rf_supp_${sfTag(dir)}",
@@ -120,18 +92,15 @@ object Mv {
     * combination) but still orders of magnitude under the fact — the
     * classic aggregate-table trade. */
   def ensureLineitemSuppPartMv(s: SparkSession, dir: String): MvDef = {
-    val out = warehouseDir(s, s"graft_mv_lineitem_supp_part_${sfTag(dir)}")
-    val tag = s"$dir|lineitem|rf,suppkey,partkey|v1"
-    if (!readMarker(s, out).contains(tag)) {
-      graft.util.Artifacts.recordBuild(s"mv_lineitem_supp_part $tag")
+    val out = Artifacts.inWarehouse(s, s"graft_mv_lineitem_supp_part_${sfTag(dir)}")
+    Artifacts.ensure(s, out, s"$dir|lineitem|rf,suppkey,partkey|v1") {
       graft.Sources.lineitem(s, dir)
         .groupBy("l_returnflag", "l_suppkey", "l_partkey")
         .agg(
           sum(graft.util.Stable.dec2(col("l_quantity"))).as("sum_qty"),
           sum(graft.util.Stable.dec2(col("l_extendedprice"))).as("sum_price"),
           count(lit(1)).as("cnt"))
-        .write.mode("overwrite").parquet(out.toString)
-      writeMarker(s, out, tag)
+        .write.parquet(out.toString)
     }
     val d = MvDef(
       name = s"lineitem_rf_supp_part_${sfTag(dir)}",
@@ -162,21 +131,16 @@ object Mv {
     * warehouse's catalog) instead of re-deriving it with a corpus scan.
     * Returns (storePath, cutoffDay). */
   def ensureEventsDayMv(s: SparkSession, dir: String): (String, Long) = {
-    val out = warehouseDir(s, s"graft_mv_events_day_${sfTag(dir)}")
-    val tagPrefix = s"$dir|events|day,type|v1|cutoff="
-    readMarker(s, out) match {
-      case Some(m) if m.startsWith(tagPrefix) =>
-        (out.toString, m.stripPrefix(tagPrefix).toLong)
-      case _ =>
-        graft.util.Artifacts.recordBuild(s"mv_events_day $dir")
-        val maxDay = graft.Sources.events(s, dir)
-          .agg(max(expr("ts div 86400000000000"))).head().getLong(0)
-        val cutoff = maxDay - 6
-        dayAgg(graft.Sources.eventsTsRange(s, dir, Long.MinValue, cutoff * DayNanos))
-          .write.mode("overwrite").parquet(out.toString)
-        writeMarker(s, out, s"$tagPrefix$cutoff")
-        (out.toString, cutoff)
+    val out = Artifacts.inWarehouse(s, s"graft_mv_events_day_${sfTag(dir)}")
+    val cutoff = Artifacts.ensureState(s, out, s"$dir|events|day,type|v1|cutoff=") {
+      val maxDay = graft.Sources.events(s, dir)
+        .agg(max(expr("ts div 86400000000000"))).head().getLong(0)
+      val cutoff = maxDay - 6
+      dayAgg(graft.Sources.eventsTsRange(s, dir, Long.MinValue, cutoff * DayNanos))
+        .write.parquet(out.toString)
+      cutoff.toString
     }
+    (out.toString, cutoff.toLong)
   }
 
   /** STREAM-MAINTAINED day-grain MV (round 12, VERDICT r11 #3 — the
@@ -198,18 +162,13 @@ object Mv {
     * streamed-maintenance-equals-recompute is the contract under test. */
   def ensureEventsDayLiveMv(s: SparkSession, dir: String,
                             chunks: Int = 4): String = {
-    val out = warehouseDir(s, s"graft_mv_events_live_${sfTag(dir)}")
-    val tag = s"$dir|events|day,type|live|v1|chunks=$chunks"
-    if (!readMarker(s, out).contains(tag)) {
-      graft.util.Artifacts.recordBuild(s"mv_events_live $dir")
-      val fs = out.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(out)) fs.delete(out, true)
+    val out = Artifacts.inWarehouse(s, s"graft_mv_events_live_${sfTag(dir)}")
+    Artifacts.ensure(s, out, s"$dir|events|day,type|live|v1|chunks=$chunks") {
       val events = graft.Sources.events(s, dir)
       (0 until chunks).foreach { i =>
         graft.streaming.Streams.mergeEventsDayMv(
           dayAgg(events.filter(col("event_id") % chunks === i)), out.toString)
       }
-      writeMarker(s, out, tag)
     }
     out.toString
   }

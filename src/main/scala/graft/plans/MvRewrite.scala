@@ -2,6 +2,7 @@ package graft.plans
 
 import java.util.concurrent.ConcurrentHashMap
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate._
@@ -55,10 +56,16 @@ case class MvDef(
 
 /** Driver-side registry of MV definitions + a cache of their analyzed
   * scan plans (one file-listing per MV, not per query). Registration is
-  * idempotent — queries re-register on every invocation. */
+  * idempotent — queries re-register on every invocation.
+  *
+  * A cached plan's `HadoopFsRelation` holds the session that analyzed
+  * it, so each entry is scoped to that session's SparkContext: any
+  * session on the same context (`newSession()`) reuses it, and the first
+  * scan after a context restart re-analyzes instead of planning against
+  * the stopped context. */
 object MvRegistry {
   private val views = new ConcurrentHashMap[String, MvDef]()
-  private val plans = new ConcurrentHashMap[String, LogicalPlan]()
+  private val plans = new ConcurrentHashMap[String, (SparkContext, LogicalPlan)]()
 
   def register(d: MvDef): Unit = {
     val prev = views.put(d.name, d)
@@ -74,8 +81,10 @@ object MvRegistry {
   /** Fresh-ExprId scan of the MV parquet (analyzed once per path, then
     * `newInstance()`d per use so two rewrites never share attribute ids). */
   def scan(spark: SparkSession, mvPath: String): Option[LogicalRelation] = {
-    val cached = plans.computeIfAbsent(mvPath, p =>
-      spark.read.parquet(p).queryExecution.analyzed)
+    val sc = spark.sparkContext
+    val (_, cached) = plans.compute(mvPath, (p, old) =>
+      if (old != null && (old._1 eq sc)) old
+      else (sc, spark.read.parquet(p).queryExecution.analyzed))
     cached match {
       case lr: LogicalRelation => Some(lr.newInstance())
       case _ => None

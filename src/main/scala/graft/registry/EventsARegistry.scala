@@ -310,34 +310,22 @@ private[graft] object EventsARegistry {
 
 
     // STORED twin of the bitmap rollup (the production shape: the
-    // per-(day, bucket) bitmap table is a WRITE-ONCE artifact — built
-    // from raw events one time, marker-gated per (sfDir), and every
-    // range question reads the tiny stored rollup and OR-merges; raw
+    // per-(day, bucket) bitmap table is a stored artifact
+    // (util.Artifacts.ensure) built from raw events once per sfDir, and
+    // every range question reads the tiny stored rollup and OR-merges; raw
     // events are never touched at question time). Same oracle as the
     // in-query twin: serving distinct counts from the stored artifact
     // must change nothing.
     "events_bitmap_rollup_stored" -> ((s, dir) => {
-      val sfTag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-      val out = new org.apache.hadoop.fs.Path(
-        s.conf.get("spark.sql.warehouse.dir"), s"graft_bitmap_rollup_$sfTag")
-      val fs = out.getFileSystem(s.sparkContext.hadoopConfiguration)
-      val marker = new org.apache.hadoop.fs.Path(out, "_GRAFT_MARKER")
-      val tag = s"$dir|bitmap_rollup|v1"
-      val fresh = fs.exists(marker) && {
-        val in = fs.open(marker)
-        try new String(in.readAllBytes(), "UTF-8") == tag finally in.close()
-      }
-      if (!fresh) {
-        util.Artifacts.recordBuild(s"bitmap_rollup $tag")
-        if (fs.exists(out)) fs.delete(out, true)
+      val out = util.Artifacts.inWarehouse(s,
+        s"graft_bitmap_rollup_${util.Artifacts.sfTag(dir)}")
+      util.Artifacts.ensure(s, out, s"$dir|bitmap_rollup|v1") {
         Sources.events(s, dir)
           .select(expr("ts DIV 86400000000000").as("day"),
             (col("user_id") + 1).as("uid1"))
           .groupBy(col("day"), expr("bitmap_bucket_number(uid1)").as("bucket"))
           .agg(expr("bitmap_construct_agg(bitmap_bit_position(uid1))").as("bm"))
           .write.parquet(new org.apache.hadoop.fs.Path(out, "daily").toString)
-        val os = fs.create(marker, true)
-        try os.write(tag.getBytes("UTF-8")) finally os.close()
       }
       val daily = s.read.parquet(new org.apache.hadoop.fs.Path(out, "daily").toString)
       val ranges = Seq(("week1", 19723L, 19730L), ("week2", 19730L, 19737L),
@@ -486,8 +474,8 @@ private[graft] object EventsARegistry {
 
     // STORED HLL RANGE QUERY (the claim events_hll_sketch_rollup makes,
     // exercised through the serving protocol): the per-(type, day)
-    // sketch table is WRITTEN ONCE per corpus (marker-gated like every
-    // stored artifact), and a date-range distinct question — "distinct
+    // sketch table is a stored artifact (util.Artifacts.ensure) per
+    // corpus, and a date-range distinct question — "distinct
     // users per type in the LATER half of the corpus" (midpoint-day cut,
     // the psi-drift discipline: in-plan, never wall-clock) — is answered
     // by unioning ONLY that range's stored sketches. The raw scan in
@@ -499,24 +487,12 @@ private[graft] object EventsARegistry {
       val ev = Sources.events(s, dir)
         .select(col("event_type"), expr("ts DIV 86400000000000").as("day"),
           col("user_id"))
-      val sfTag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-      val out = new org.apache.hadoop.fs.Path(
-        s.conf.get("spark.sql.warehouse.dir"), s"graft_hll_daily_$sfTag")
-      val fs = out.getFileSystem(s.sparkContext.hadoopConfiguration)
-      val marker = new org.apache.hadoop.fs.Path(out, "_GRAFT_MARKER")
-      val tag = s"$dir|lgK=12"
-      val fresh = fs.exists(marker) && {
-        val in = fs.open(marker)
-        try new String(in.readAllBytes(), "UTF-8") == tag finally in.close()
-      }
-      if (!fresh) {
-        util.Artifacts.recordBuild(s"hll_daily $tag")
-        if (fs.exists(out)) fs.delete(out, true)
+      val out = util.Artifacts.inWarehouse(s,
+        s"graft_hll_daily_${util.Artifacts.sfTag(dir)}")
+      util.Artifacts.ensure(s, out, s"$dir|lgK=12") {
         ev.groupBy("event_type", "day")
           .agg(expr("hll_sketch_agg(user_id, 12)").as("sk"))
-          .write.mode("overwrite").parquet(out.toString)
-        val os = fs.create(marker, true)
-        try os.write(tag.getBytes("UTF-8")) finally os.close()
+          .write.parquet(out.toString)
       }
       val cut = ev.agg(((min(col("day")) + max(col("day")) + 1L) / 2L)
         .cast("long").as("cutd"))

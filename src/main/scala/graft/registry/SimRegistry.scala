@@ -40,36 +40,26 @@ private[graft] object SimRegistry {
 
     // STORED RHP band index (the banding tier's serving shape — the
     // embedding-side analogue of the stored LSH text band index): the
-    // (vec_id, band_idx, band_key) table is written once per (corpus,
-    // banding profile), marker-gated; probes sketch only the query side
-    // and equi-join the artifact, touching raw vectors for the candidate
-    // re-rank only. Same oracle as the in-query twin — the index is a
-    // deterministic projection, so the round-trip changes nothing.
+    // (vec_id, band_idx, band_key) table is a stored artifact
+    // (util.Artifacts.ensure) per (corpus, banding profile); probes
+    // sketch only the query side and equi-join the artifact, touching
+    // raw vectors for the candidate re-rank only. Same oracle as the
+    // in-query twin — the index is a deterministic projection, so the
+    // round-trip changes nothing.
     "sim_ann_rhp_stored" -> ((s, dir) => {
       val emb = Sources.embeddings(s, dir)
         .select(col("vec_id").as("id"), col("embedding").as("vec"))
-      val sfTag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-      val out = new org.apache.hadoop.fs.Path(
-        s.conf.get("spark.sql.warehouse.dir"), s"graft_rhp_bidx_$sfTag")
-      val fs = out.getFileSystem(s.sparkContext.hadoopConfiguration)
-      val marker = new org.apache.hadoop.fs.Path(out, "_GRAFT_MARKER")
-      val tag = s"$dir|bits=${sim.Similarity.NumBits}|bands=${sim.Similarity.NumBands}|v=2"
-      val fresh = fs.exists(marker) && {
-        val in = fs.open(marker)
-        try new String(in.readAllBytes(), "UTF-8") == tag finally in.close()
-      }
-      if (!fresh) {
-        util.Artifacts.recordBuild(s"rhp_bidx $tag")
-        if (fs.exists(out)) fs.delete(out, true)
+      val out = util.Artifacts.inWarehouse(s,
+        s"graft_rhp_bidx_${util.Artifacts.sfTag(dir)}")
+      util.Artifacts.ensure(s, out,
+          s"$dir|bits=${sim.Similarity.NumBits}|bands=${sim.Similarity.NumBands}|v=2") {
         sim.Similarity.rhpBandIndex(emb)
-          .write.mode("overwrite").parquet(s"$out/rows")
+          .write.parquet(s"$out/rows")
         // The sketch table rides along (v=2): probes don't read it, but
         // Streams.rhpIngest adjudicates near-dups from it — the full
         // serving artifact is (band rows, sketches).
         sim.Similarity.rhpSketches(emb)
-          .write.mode("overwrite").parquet(s"$out/sketches")
-        val os = fs.create(marker, true)
-        try os.write(tag.getBytes("UTF-8")) finally os.close()
+          .write.parquet(s"$out/sketches")
       }
       sim.Similarity.rhpProbe(emb.filter(col("id") < 5), emb,
         s.read.parquet(s"$out/rows"), 10)
@@ -106,33 +96,21 @@ private[graft] object SimRegistry {
 
 
     // STORED coarse quantizer (the true serving shape): the trained
-    // centroid table is WRITTEN ONCE per (corpus, params) — marker-
-    // gated exactly like the stored LSH band index — and every probe
-    // reads the artifact, so training cost amortizes to zero across
-    // runs. At cluster scale this is how ANN serving actually works:
-    // the quantizer is a published table, not an in-query derivation.
+    // centroid table is a stored artifact (util.Artifacts.ensure) per
+    // (corpus, params), and every probe reads the artifact, so training
+    // cost amortizes to zero across runs. At cluster scale this is how
+    // ANN serving actually works: the quantizer is a published table,
+    // not an in-query derivation.
     // Same oracle as the in-query twin: the parquet round-trip of the
     // double[] centroids must change nothing.
     "sim_ann_ivf_stored" -> ((s, dir) => {
       val emb = Sources.embeddings(s, dir)
         .select(col("vec_id").as("id"), col("embedding").as("vec"))
-      val sfTag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-      val out = new org.apache.hadoop.fs.Path(
-        s.conf.get("spark.sql.warehouse.dir"), s"graft_ivf_cents_$sfTag")
-      val fs = out.getFileSystem(s.sparkContext.hadoopConfiguration)
-      val marker = new org.apache.hadoop.fs.Path(out, "_GRAFT_MARKER")
-      val tag = s"$dir|k=16|iters=1"
-      val fresh = fs.exists(marker) && {
-        val in = fs.open(marker)
-        try new String(in.readAllBytes(), "UTF-8") == tag finally in.close()
-      }
-      if (!fresh) {
-        util.Artifacts.recordBuild(s"ivf_centroids $tag")
-        if (fs.exists(out)) fs.delete(out, true)
+      val out = util.Artifacts.inWarehouse(s,
+        s"graft_ivf_cents_${util.Artifacts.sfTag(dir)}")
+      util.Artifacts.ensure(s, out, s"$dir|k=16|iters=1") {
         sim.Similarity.trainCentroids(emb, numCentroids = 16, iters = 1)
-          .write.mode("overwrite").parquet(out.toString)
-        val os = fs.create(marker, true)
-        try os.write(tag.getBytes("UTF-8")) finally os.close()
+          .write.parquet(out.toString)
       }
       val cents = s.read.parquet(out.toString)
       sim.Similarity.ivfTopKWith(emb.filter(col("id") < 5), emb, 10, cents)
@@ -172,8 +150,8 @@ private[graft] object SimRegistry {
     // written once per (corpus, params) — rows/ (vec_id, bucket,
     // codes: array<int> — CODES, a fraction of the corpus bytes, never
     // reconstructions), coarse/ (the quantizer) and book/ (the dense
-    // codebook) — marker-gated like the stored LSH band index and the
-    // stored IVF quantizer. Every probe reads the artifacts only: index
+    // codebook), one stored artifact (util.Artifacts.ensure). Every
+    // probe reads the artifacts only: index
     // build amortizes to zero across runs, reconstruction happens at
     // probe time behind the broadcast codebook LUT, and the corpus is
     // touched only for the rerank survivors' raw vectors. Same oracle as
@@ -181,27 +159,16 @@ private[graft] object SimRegistry {
     "sim_ann_ivfpq_stored" -> ((s, dir) => {
       val emb = Sources.embeddings(s, dir)
         .select(col("vec_id").as("id"), col("embedding").as("vec"))
-      val sfTag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-      val out = new org.apache.hadoop.fs.Path(
-        s.conf.get("spark.sql.warehouse.dir"), s"graft_ivfpq_idx_$sfTag")
-      val fs = out.getFileSystem(s.sparkContext.hadoopConfiguration)
-      val marker = new org.apache.hadoop.fs.Path(out, "_GRAFT_MARKER")
-      val tag = s"$dir|c=16|m=${sim.Similarity.PqSubspaces}|k=${sim.Similarity.PqCodewords}|v=codes"
-      val fresh = fs.exists(marker) && {
-        val in = fs.open(marker)
-        try new String(in.readAllBytes(), "UTF-8") == tag finally in.close()
-      }
-      if (!fresh) {
-        util.Artifacts.recordBuild(s"ivfpq_index $tag")
-        if (fs.exists(out)) fs.delete(out, true)
+      val out = util.Artifacts.inWarehouse(s,
+        s"graft_ivfpq_idx_${util.Artifacts.sfTag(dir)}")
+      util.Artifacts.ensure(s, out,
+          s"$dir|c=16|m=${sim.Similarity.PqSubspaces}|k=${sim.Similarity.PqCodewords}|v=codes") {
         val coarse = sim.Similarity.sampledCentroids(emb, 16)
         val book = sim.Similarity.ivfPqBook(emb)
-        coarse.write.mode("overwrite").parquet(s"$out/coarse")
-        book.write.mode("overwrite").parquet(s"$out/book")
+        coarse.write.parquet(s"$out/coarse")
+        book.write.parquet(s"$out/book")
         sim.Similarity.ivfPqIndexWith(emb, coarse, book)
-          .write.mode("overwrite").parquet(s"$out/rows")
-        val os = fs.create(marker, true)
-        try os.write(tag.getBytes("UTF-8")) finally os.close()
+          .write.parquet(s"$out/rows")
       }
       sim.Similarity.ivfPqProbe(emb.filter(col("id") < 5), emb,
         s.read.parquet(s"$out/rows"), s.read.parquet(s"$out/coarse"),
@@ -233,27 +200,16 @@ private[graft] object SimRegistry {
     "sim_ann_ivfpq_residual_stored" -> ((s, dir) => {
       val emb = Sources.embeddings(s, dir)
         .select(col("vec_id").as("id"), col("embedding").as("vec"))
-      val sfTag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-      val out = new org.apache.hadoop.fs.Path(
-        s.conf.get("spark.sql.warehouse.dir"), s"graft_ivfpqr_idx_$sfTag")
-      val fs = out.getFileSystem(s.sparkContext.hadoopConfiguration)
-      val marker = new org.apache.hadoop.fs.Path(out, "_GRAFT_MARKER")
-      val tag = s"$dir|c=16|m=${sim.Similarity.PqSubspaces}|k=${sim.Similarity.PqCodewords}|enc=residual"
-      val fresh = fs.exists(marker) && {
-        val in = fs.open(marker)
-        try new String(in.readAllBytes(), "UTF-8") == tag finally in.close()
-      }
-      if (!fresh) {
-        util.Artifacts.recordBuild(s"ivfpqr_index $tag")
-        if (fs.exists(out)) fs.delete(out, true)
+      val out = util.Artifacts.inWarehouse(s,
+        s"graft_ivfpqr_idx_${util.Artifacts.sfTag(dir)}")
+      util.Artifacts.ensure(s, out,
+          s"$dir|c=16|m=${sim.Similarity.PqSubspaces}|k=${sim.Similarity.PqCodewords}|enc=residual") {
         val coarse = sim.Similarity.sampledCentroids(emb, 16)
         val book = sim.Similarity.ivfPqResidualBook(emb, coarse)
-        coarse.write.mode("overwrite").parquet(s"$out/coarse")
-        book.write.mode("overwrite").parquet(s"$out/book")
+        coarse.write.parquet(s"$out/coarse")
+        book.write.parquet(s"$out/book")
         sim.Similarity.ivfPqResidualIndex(emb, coarse, book)
-          .write.mode("overwrite").parquet(s"$out/rows")
-        val os = fs.create(marker, true)
-        try os.write(tag.getBytes("UTF-8")) finally os.close()
+          .write.parquet(s"$out/rows")
       }
       sim.Similarity.ivfPqResidualProbe(emb.filter(col("id") < 5), emb,
         s.read.parquet(s"$out/rows"), s.read.parquet(s"$out/coarse"),

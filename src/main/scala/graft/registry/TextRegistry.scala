@@ -813,30 +813,18 @@ private[graft] object TextRegistry {
 
     // STORED trained tokenizer (the publish-once shape): the 6-merge
     // training runs once per corpus and its per-word token counts land
-    // as a marker-gated artifact — every downstream application (here
-    // the fertility readout) is then one vocabulary-grain broadcast
-    // join, the tokenizer-as-published-table discipline production
-    // pipelines actually ship. Same oracle as the in-query twin — the
-    // artifact round-trip must change nothing.
+    // as a stored artifact (util.Artifacts.ensure) — every downstream
+    // application (here the fertility readout) is then one
+    // vocabulary-grain broadcast join, the tokenizer-as-published-table
+    // discipline production pipelines actually ship. Same oracle as the
+    // in-query twin — the artifact round-trip must change nothing.
     "text_bpe_fertility_stored" -> ((s, dir) => {
       val docs = Sources.documents(s, dir)
-      val sfTag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-      val out = new org.apache.hadoop.fs.Path(
-        s.conf.get("spark.sql.warehouse.dir"), s"graft_bpe_tok_$sfTag")
-      val fs = out.getFileSystem(s.sparkContext.hadoopConfiguration)
-      val marker = new org.apache.hadoop.fs.Path(out, "_GRAFT_MARKER")
-      val tag = s"$dir|steps=6"
-      val fresh = fs.exists(marker) && {
-        val in = fs.open(marker)
-        try new String(in.readAllBytes(), "UTF-8") == tag finally in.close()
-      }
-      if (!fresh) {
-        util.Artifacts.recordBuild(s"bpe_tokens $tag")
-        if (fs.exists(out)) fs.delete(out, true)
+      val out = util.Artifacts.inWarehouse(s,
+        s"graft_bpe_tok_${util.Artifacts.sfTag(dir)}")
+      util.Artifacts.ensure(s, out, s"$dir|steps=6") {
         text.Bpe.trainedWordTokens(docs, 6)
-          .write.mode("overwrite").parquet(out.toString)
-        val os = fs.create(marker, true)
-        try os.write(tag.getBytes("UTF-8")) finally os.close()
+          .write.parquet(out.toString)
       }
       text.Bpe.fertilityByLangWith(docs, s.read.parquet(out.toString))
     }),

@@ -32,10 +32,13 @@ object HostTelemetry {
   private def loadArr(l: Seq[Double]) =
     l.map(v => f"$v%.2f").mkString("[", ",", "]")
 
-  /** One JSON object covering a sweep bracketed by the two samples. */
+  /** One JSON object covering a sweep bracketed by the two samples;
+    * `loadEntry`, when given, is the load sampled at process entry. */
   def json(load0: Seq[Double], cpu0: Seq[Long],
-           load1: Seq[Double], cpu1: Seq[Long]): String =
+           load1: Seq[Double], cpu1: Seq[Long],
+           loadEntry: Option[Seq[Double]] = None): String =
     s"""{"cpus":${Runtime.getRuntime.availableProcessors()},""" +
+      loadEntry.fold("")(l => s""""loadavg_entry":${loadArr(l)},""") +
       s""""loadavg_start":${loadArr(load0)},"loadavg_end":${loadArr(load1)},""" +
       s""""steal_pct":${f"${stealPct(cpu0, cpu1)}%.3f"}}"""
 }

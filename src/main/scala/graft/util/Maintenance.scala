@@ -127,12 +127,13 @@ object Maintenance {
     * same tmp/bak naming, same [[recoverInterruptedCompact]] recovery,
     * same crash-window guarantees. The live CATALOG ENTRY never changes
     * (so managed and `CREATE TABLE … LOCATION`-registered tables both
-    * work), and auxiliary metadata in the live dir — the `_GRAFT_MARKER`
-    * build tag, `_batches/` replay markers, the `_GRAFT_MAXSID` dict
-    * counter — is copied into the staging output BEFORE the swap: content
-    * is row-identical, so markers stay valid. Caller owns quiescence,
-    * exactly like compactInPlace (the streaming wrappers run maintenance
-    * on the foreachBatch thread, which serializes micro-batches). */
+    * work), and auxiliary metadata in the live dir — the stored-artifact
+    * marker ([[Artifacts.ensure]]), `_batches/` replay markers, the
+    * `_GRAFT_MAXSID` dict counter — is copied into the staging output
+    * BEFORE the swap: content is row-identical, so markers stay valid.
+    * Caller owns quiescence, exactly like compactInPlace (the streaming
+    * wrappers run maintenance on the foreachBatch thread, which
+    * serializes micro-batches). */
   def rebucketTable(spark: SparkSession, table: String): (FileStats, FileStats) = {
     val catalog = spark.sessionState.catalog
     val ident = spark.sessionState.sqlParser.parseTableIdentifier(table)

@@ -357,7 +357,7 @@ class DedupSpec extends SparkSpec {
     if (fs.exists(dst)) fs.delete(dst, true)
     org.apache.hadoop.fs.FileUtil.copy(fs, src, fs, dst, false, conf)
     spark.sql(s"DROP TABLE IF EXISTS ${base}_shingles_restartcopy")
-    Dedup.registerBucketedTable(spark, s"${base}_shingles_restartcopy",
+    util.Artifacts.registerBucketedTable(spark, s"${base}_shingles_restartcopy",
       dst.toString, Dedup.IndexBuckets)
     val re = spark.table(s"${base}_shingles_restartcopy")
     assert(re.count() === shE.count())

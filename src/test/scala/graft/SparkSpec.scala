@@ -6,14 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** One shared local session for the whole forked test JVM. */
 object TestSession {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .withExtensions(new functions.GraftExtensions)
-      .master("local[4]")
+    val s = GraftSession.builder("4")
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
