@@ -18,14 +18,59 @@ import org.apache.spark.sql.functions._
 object Sources {
 
   /** Full-collection scan (reference S1/S2). Schema comes from the parquet
-    * footer — no sampling pass, no driver materialization. Guarded by the
-    * S5 existence probe (the reference checks `list_collection_names`
-    * before reading, `idx_transform.py:290-292`) so a missing table fails
-    * with a clear message instead of an analyzer path error. */
+    * footer ([[parquet]]) — no sampling pass, no driver materialization,
+    * no job. Guarded by the S5 existence probe (the reference checks
+    * `list_collection_names` before reading, `idx_transform.py:290-292`)
+    * so a missing table fails with a clear message instead of an analyzer
+    * path error. */
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     require(tableExists(sfDir, name),
       s"table '$name' does not exist under $sfDir (S5 existence probe)")
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    parquet(spark, s"$sfDir/$name.parquet")
+  }
+
+  /** A parquet read whose schema is read on the driver from one footer,
+    * where `spark.read.parquet` would run a one-task schema-inference job
+    * per call. The footer is the one Spark's own inference reads (with
+    * `mergeSchema` off): the file itself, or the first data file of a
+    * directory in path order, skipping `_`/`.` files. The converter is
+    * built from the session's SQL conf, so `nanosAsLong`, the
+    * timestamp-NTZ inference and the binary-as-string settings apply
+    * exactly as they do to inference. Nothing is cached: each call reads
+    * its footer again. A missing path, or a directory with no data file
+    * at its top level (empty, or partitioned into subdirectories), falls
+    * back to `spark.read.parquet` and its own inference and errors. */
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    footerSchema(spark, path) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None => spark.read.parquet(path)
+    }
+
+  private def footerSchema(spark: SparkSession, path: String)
+      : Option[org.apache.spark.sql.types.StructType] = {
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.format.converter.ParquetMetadataConverter
+    import org.apache.parquet.hadoop.Footer
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.spark.sql.execution.datasources.parquet.{
+      ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+    val hadoopConf = spark.sessionState.newHadoopConf()
+    val p = new Path(path)
+    val fs = p.getFileSystem(hadoopConf)
+    val file = if (!fs.exists(p)) None else {
+      val st = fs.getFileStatus(p)
+      if (st.isFile) Some(st)
+      else fs.listStatus(p).filter { f =>
+        val n = f.getPath.getName
+        f.isFile && !n.startsWith("_") && !n.startsWith(".")
+      }.sortBy(_.getPath.toString).headOption
+    }
+    file.map { f =>
+      val meta = ParquetFooterReader.readFooter(
+        HadoopInputFile.fromStatus(f, hadoopConf), ParquetMetadataConverter.SKIP_ROW_GROUPS)
+      ParquetFileFormat.readSchemaFromFooter(new Footer(f.getPath, meta),
+        new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+    }
   }
 
   def lineitem(spark: SparkSession, sfDir: String): DataFrame = table(spark, sfDir, "lineitem")

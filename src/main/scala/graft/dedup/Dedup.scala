@@ -618,10 +618,11 @@ object Dedup {
     sh.write.mode("append").parquet(s"$dir/shingles")
   }
 
-  /** (band index, shingle store) readers for a [[writeLshIndex]] dir. */
+  /** (band index, shingle store) readers for a [[writeLshIndex]] dir,
+    * schemas from the parquet footer (no inference job per read). */
   def readLshIndex(spark: org.apache.spark.sql.SparkSession,
                    dir: String): (DataFrame, DataFrame) =
-    (spark.read.parquet(s"$dir/bands"), spark.read.parquet(s"$dir/shingles"))
+    (graft.Sources.parquet(spark, s"$dir/bands"), graft.Sources.parquet(spark, s"$dir/shingles"))
 
   /** Bucket count of the BUCKETED index tier — matches the local[32]
     * harness; on a real cluster size it to corpus/bucket targets. */

@@ -42,11 +42,17 @@ private[graft] object GraphMmRegistry {
 
     // IDX 32-column financial report: nested-struct projection, string→
     // double casts, fillna, coalesce, nullif ratios, pinned column order
-    // (idx_transform.py:107-273).
-    "idx_financials" -> ((s, dir) =>
-      idx.FinancialReport.transform(
-        idx.FinancialReport.fixtureFromOrders(Sources.orders(s, dir)))
-        .orderBy("company_code")),
+    // (idx_transform.py:107-273). On a narrow scan, the exchange carries
+    // the six source columns the fixture reads, range-partitioned on
+    // o_orderkey (= company_code): the trailing orderBy is a local sort
+    // and the 32-column rows are never shuffled.
+    "idx_financials" -> ((s, dir) => {
+      val orders = Sources.orders(s, dir).select("o_orderkey", "o_custkey",
+        "o_orderstatus", "o_orderpriority", "o_orderdate", "o_totalprice")
+      idx.FinancialReport.transform(idx.FinancialReport.fixtureFromOrders(
+          util.Par.widenByRange(orders, col("o_orderkey"))))
+        .orderBy("company_code")
+    }),
 
 
     // Referential-integrity audit across every declared FK relationship —

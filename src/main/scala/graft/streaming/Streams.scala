@@ -66,6 +66,23 @@ object Streams {
       "a genuine first delivery, its ids collide with the index and the " +
       "id-space contract is violated upstream.")
 
+  /** The read half of every marker-gated ingest below. Unless `marker`
+    * exists, the micro-batch is materialized ONCE and `apply` runs on the
+    * cached view when the same action counted any rows: the source is
+    * read once, so `numInputRows` counts each row once (an `isEmpty`
+    * probe before the materialize read it twice). The marker is checked
+    * first, so a replayed batch reads nothing. The batch's views are
+    * reclaimed after `apply`. */
+  private def unmarkedBatch(fs: org.apache.hadoop.fs.FileSystem,
+                            marker: org.apache.hadoop.fs.Path,
+                            batch: Dataset[org.apache.spark.sql.Row])
+                           (apply: DataFrame => Unit): Unit =
+    if (!fs.exists(marker)) {
+      val (b, n) = graft.util.Views.materializeCounted(batch.toDF())
+      if (n > 0) apply(b)
+      graft.util.Views.unpersistAll()
+    }
+
   /** Tumbling event-time window aggregate. On a stream, pair with
     * [[withWatermarked]] so state is dropped after `watermark`. */
   def hourlyTypeCounts(events: DataFrame): DataFrame =
@@ -193,9 +210,8 @@ object Streams {
         val marker = new org.apache.hadoop.fs.Path(
           s"$indexDir/_batches/$lineage-$batchId")
         val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (!fs.exists(marker) && !batch.isEmpty) {
+        unmarkedBatch(fs, marker, batch) { b =>
           val (bandE, shE) = graft.dedup.Dedup.readLshIndex(spark, indexDir)
-          val b = graft.util.Views.materialize(batch.toDF())
           // Crash-window adjudication (the annIngest shape): all batch
           // ids already indexed = applied replay; none = first delivery;
           // partial = undecidable, fail with the recovery path. (A batch
@@ -230,7 +246,6 @@ object Streams {
               (batchId + 1) % compactEvery == 0)
             Seq("bands", "shingles").foreach(t => graft.util.Maintenance
               .compactInPlace(spark, s"$indexDir/$t", compactTargetBytes))
-          graft.util.Views.unpersistAll()
         }
       }
       .start()
@@ -295,7 +310,7 @@ object Streams {
         val marker = new org.apache.hadoop.fs.Path(
           s"$warehouse/${base}_bands/_batches/$lineage-$batchId")
         val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (!fs.exists(marker) && !batch.isEmpty) {
+        unmarkedBatch(fs, marker, batch) { b =>
           // Maintenance-enabled streams heal an interrupted rebucket
           // BEFORE the first table read (ADVICE r12): a crash mid-swap
           // leaves a live dir renamed to its bak, and the adjudication
@@ -304,7 +319,6 @@ object Streams {
           if (rebucketFilesPerBucket > 0)
             Seq("shingles", "bands", "dict", "shids").foreach(p =>
               graft.util.Maintenance.recoverTable(spark, s"${base}_$p"))
-          val b = graft.util.Views.materialize(batch.toDF())
           // All catalog reads go through the BATCH's session: foreachBatch
           // runs in a session CLONE whose writes refresh only its own
           // relation cache, so the stream must read what it wrote through
@@ -371,7 +385,6 @@ object Streams {
               bs.catalog.refreshTable(s"${base}_$p")
             }
           }
-          graft.util.Views.unpersistAll()
         }
       }
       .start()
@@ -429,11 +442,10 @@ object Streams {
         val marker = new org.apache.hadoop.fs.Path(
           s"$indexDir/_batches/$lineage-$batchId")
         val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (!fs.exists(marker) && !batch.isEmpty) {
-          val rows = spark.read.parquet(s"$indexDir/rows")
-          val coarse = spark.read.parquet(s"$indexDir/coarse")
-          val book = spark.read.parquet(s"$indexDir/book")
-          val b = graft.util.Views.materialize(batch.toDF())
+        unmarkedBatch(fs, marker, batch) { b =>
+          val rows = graft.Sources.parquet(spark, s"$indexDir/rows")
+          val coarse = graft.Sources.parquet(spark, s"$indexDir/coarse")
+          val book = graft.Sources.parquet(spark, s"$indexDir/book")
           // Crash-window self-heal: append and marker are two writes. A
           // marker-missing batch whose ids are ALL already indexed is an
           // already-applied replay — re-write the marker and skip (never
@@ -475,7 +487,6 @@ object Streams {
               (batchId + 1) % compactEvery == 0)
             graft.util.Maintenance.compactInPlace(
               spark, s"$indexDir/rows", compactTargetBytes)
-          graft.util.Views.unpersistAll()
         }
       }
       .start()
@@ -520,10 +531,9 @@ object Streams {
         val marker = new org.apache.hadoop.fs.Path(
           s"$indexDir/_batches/$lineage-$batchId")
         val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (!fs.exists(marker) && !batch.isEmpty) {
-          val bandIdx = spark.read.parquet(s"$indexDir/rows")
-          val sks = spark.read.parquet(s"$indexDir/sketches")
-          val b = graft.util.Views.materialize(batch.toDF())
+        unmarkedBatch(fs, marker, batch) { b =>
+          val bandIdx = graft.Sources.parquet(spark, s"$indexDir/rows")
+          val sks = graft.Sources.parquet(spark, s"$indexDir/sketches")
           // Disjointness against BOTH stored tables (rows/ is written
           // first — orphaned band rows from a crash between the two
           // appends must be detected, not silently re-appended), with
@@ -563,7 +573,6 @@ object Streams {
               (batchId + 1) % compactEvery == 0)
             Seq("rows", "sketches").foreach(t => graft.util.Maintenance
               .compactInPlace(spark, s"$indexDir/$t", compactTargetBytes))
-          graft.util.Views.unpersistAll()
         }
       }
       .start()
@@ -610,14 +619,12 @@ object Streams {
         val marker = new org.apache.hadoop.fs.Path(
           s"$storeDir/_batches/$lineage-$batchId")
         val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (!fs.exists(marker) && !batch.isEmpty) {
-          val b = graft.util.Views.materialize(batch.toDF())
+        unmarkedBatch(fs, marker, batch) { b =>
           val ups = b.filter(col("op") =!= "d").drop("op")
           val dels = b.filter(col("op") === "d").select(col(idCol))
           graft.sources.SnapshotStore.commit(ups,
             if (dels.isEmpty) None else Some(dels), storeDir, idCol)
           fs.create(marker, true).close()
-          graft.util.Views.unpersistAll()
         }
       }
       .start()

@@ -130,16 +130,16 @@ object ScaleUp {
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(out).mkdirs()
     if (tables("documents"))
-      documentsScaled(spark.read.parquet(s"$src/documents.parquet"), factor)
+      documentsScaled(graft.Sources.table(spark, src, "documents"), factor)
         .repartition(8).write.mode("overwrite").parquet(s"$out/documents.parquet")
     if (tables("embeddings"))
-      embeddingsScaled(spark.read.parquet(s"$src/embeddings.parquet"), factor)
+      embeddingsScaled(graft.Sources.table(spark, src, "embeddings"), factor)
         .repartition(4).write.mode("overwrite").parquet(s"$out/embeddings.parquet")
     if (tables("lineitem"))
-      lineitemScaled(spark.read.parquet(s"$src/lineitem.parquet"), factor)
+      lineitemScaled(graft.Sources.table(spark, src, "lineitem"), factor)
         .repartition(16).write.mode("overwrite").parquet(s"$out/lineitem.parquet")
     if (tables("events"))
-      eventsScaled(spark.read.parquet(s"$src/events.parquet"), factor)
+      eventsScaled(graft.Sources.table(spark, src, "events"), factor)
         .repartition(8).write.mode("overwrite").parquet(s"$out/events.parquet")
     println(s"[scaleup] wrote ${factor}x of $src to $out " +
       s"(${tables.toSeq.sorted.mkString(",")})")

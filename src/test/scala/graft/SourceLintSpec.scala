@@ -42,6 +42,11 @@ class SourceLintSpec extends AnyFunSuite {
     assert(bad.isEmpty, s"registerBucketedTable redefined in: ${bad.mkString(", ")}")
   }
 
+  test("source tables are read only through Sources.table") {
+    val bad = offenders("read\\s*\\.\\s*parquet\\s*\\(\\s*s?\"[^\"]*\\.parquet\"", "graft/Sources.scala")
+    assert(bad.isEmpty, s"read.parquet of a <table>.parquet path outside Sources in: ${bad.mkString(", ")}")
+  }
+
   test("sessions open only through GraftSession") {
     val bad = offenders("SparkSession\\s*\\.\\s*builder\\b", "graft/GraftSession.scala")
     assert(bad.isEmpty, s"SparkSession.builder() outside GraftSession in: ${bad.mkString(", ")}")

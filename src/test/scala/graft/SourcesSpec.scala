@@ -18,6 +18,40 @@ class SourcesSpec extends SparkSpec {
     assert(e.getMessage.contains("S5 existence probe"))
   }
 
+  // --- schemas come from the parquet footer, with no job.
+
+  private def tables: Seq[String] =
+    new java.io.File(sfDir).listFiles().map(_.getName)
+      .filter(_.endsWith(".parquet")).map(_.stripSuffix(".parquet")).sorted.toSeq
+
+  test("Sources.table's footer schema equals Spark's inferred schema for every table") {
+    assert(tables.size >= 10)
+    tables.foreach { t =>
+      assert(Sources.table(spark, sfDir, t).schema ===
+        spark.read.parquet(s"$sfDir/$t.parquet").schema, s"table $t")
+    }
+  }
+
+  test("Sources.table launches no job; Spark's inference launches one") {
+    val probe = new JobProbe(spark)
+    val (_, readJobs, _) = probe.run(tables.foreach(Sources.table(spark, sfDir, _)))
+    assert(readJobs === 0)
+    // The probe sees inference jobs, so the 0 above is not a blind count.
+    val (_, inferJobs, _) = probe.run(spark.read.parquet(s"$sfDir/orders.parquet"))
+    assert(inferJobs >= 1)
+  }
+
+  test("Sources.parquet reads a directory's first data file footer, skipping _ and . files") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_footer").toString
+    val df = spark.range(10).selectExpr("id", "cast(id as string) as s")
+    df.repartition(2).write.mode("overwrite").parquet(s"$dir/t")
+    val probe = new JobProbe(spark)
+    val (read, jobs, _) = probe.run(Sources.parquet(spark, s"$dir/t"))
+    assert(jobs === 0)
+    assert(read.schema === spark.read.parquet(s"$dir/t").schema)
+    assert(read.orderBy("id").collect().toSeq === df.orderBy("id").collect().toSeq)
+  }
+
   test("S6 hasColumn: present and absent columns") {
     val li = Sources.lineitem(spark, sfDir)
     assert(Sources.hasColumn(li, "l_shipdate"))

@@ -258,6 +258,9 @@ class StreamingSpec extends SparkSpec {
       stream.addData(mb2.toIndexedSeq: _*); q.processAllAvailable()
     } finally q.stop()
     assert(perBatch.size === 2)
+    // Each micro-batch reads its source once: numInputRows is its doc count.
+    assert(q.recentProgress.map(_.numInputRows).filter(_ > 0).toSeq ===
+      Seq(mb1.length.toLong, mb2.length.toLong))
     // Expected fold: mb1 probes the corpus index; mb2 probes corpus ∪
     // accepted(mb1) — the in-query batch twin computes each step.
     val mb1Df = spark.createDataFrame(mb1.toIndexedSeq).select("doc_id", "text")
