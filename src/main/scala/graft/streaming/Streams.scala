@@ -1,8 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, StreamingQuery, TTLConfig, TimeMode, TimerValues, ValueState}
 
 import graft.util.Stable
 
@@ -50,38 +51,108 @@ object Streams {
 
   private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
-  /** Prominent trace for the crash-window self-heal (ADVICE r10): a
-    * marker-less batch whose ids are ALL already indexed is treated as
-    * an applied replay and skipped — correct for the crash-between-
-    * append-and-marker window, but indistinguishable from a genuine
-    * first delivery whose ids fully collide with the index (an id-space
-    * contract violation upstream). The skip is therefore never silent:
-    * the operator log carries the batch id, lineage, and index so a
+  /** Prominent trace for the crash-window self-heal: a marker-less batch
+    * whose ids are ALL already indexed is treated as an applied replay
+    * and skipped — correct for the crash-between-append-and-marker
+    * window, but indistinguishable from a genuine first delivery whose
+    * ids fully collide with the index (an id-space contract violation
+    * upstream). The skip is therefore never silent: the marker path in
+    * the log names the index, the lineage and the batch id, so a
     * full-overlap collision is auditable after the fact. */
-  private def warnSelfHeal(op: String, indexDir: String, lineage: String,
-                           batchId: Long, nIds: Long): Unit =
-    log.warn(s"$op: batch $batchId (lineage $lineage) has no replay marker " +
-      s"but all $nIds ids are already in $indexDir — treating as an " +
-      "applied replay (marker written, batch skipped). If this batch was " +
-      "a genuine first delivery, its ids collide with the index and the " +
-      "id-space contract is violated upstream.")
+  private def warnSelfHeal(op: String, marker: Path, nIds: Long): Unit =
+    log.warn(s"$op: no replay marker $marker, but all $nIds batch ids " +
+      "are already in the stored index — treating the batch as an applied " +
+      "replay (marker written, batch skipped). If this batch was a genuine " +
+      "first delivery, its ids collide with the index and the id-space " +
+      "contract is violated upstream.")
 
-  /** The read half of every marker-gated ingest below. Unless `marker`
-    * exists, the micro-batch is materialized ONCE and `apply` runs on the
-    * cached view when the same action counted any rows: the source is
-    * read once, so `numInputRows` counts each row once (an `isEmpty`
-    * probe before the materialize read it twice). The marker is checked
-    * first, so a replayed batch reads nothing. The batch's views are
-    * reclaimed after `apply`. */
-  private def unmarkedBatch(fs: org.apache.hadoop.fs.FileSystem,
-                            marker: org.apache.hadoop.fs.Path,
-                            batch: Dataset[org.apache.spark.sql.Row])
-                           (apply: DataFrame => Unit): Unit =
-    if (!fs.exists(marker)) {
-      val (b, n) = graft.util.Views.materializeCounted(batch.toDF())
-      if (n > 0) apply(b)
-      graft.util.Views.unpersistAll()
+  /** The read half of every `foreachBatch` below: the micro-batch is
+    * materialized ONCE and `apply` runs on the cached view when the same
+    * action counted any rows. The source is read once, so `numInputRows`
+    * counts each row once (an `isEmpty` probe before the read would read
+    * it twice). The batch's views are reclaimed after `apply`. */
+  private def nonEmptyBatch(batch: Dataset[Row])(apply: DataFrame => Unit): Unit = {
+    val (b, n) = graft.util.Views.materializeCounted(batch.toDF())
+    if (n > 0) apply(b)
+    graft.util.Views.unpersistAll()
+  }
+
+  /** The replay protocol of every stream whose batch effect is not
+    * idempotent (README, "Stream batches"). A batch's marker is
+    * `<markerDir>/_batches/<lineage>-<batchId>`; the lineage is derived
+    * from `checkpointLocation`, since batch ids only mean something
+    * within one checkpoint (a restart on the same checkpoint continues
+    * them; without one, every `start()` is a new lineage). Per batch:
+    * the marker is checked first, so a replay reads nothing; the batch
+    * is read once and skipped at 0 rows ([[nonEmptyBatch]]); then
+    * `apply(batch, marker)`, the marker (only if `apply` returned), and
+    * `maintain(batchId)`. Everything runs on the foreachBatch thread,
+    * so maintenance never races an in-flight batch. */
+  private def markedBatches(stream: DataFrame, markerDir: String,
+                            checkpointLocation: Option[String])
+                           (apply: (DataFrame, Path) => Unit)
+                           (maintain: Long => Unit): StreamingQuery = {
+    val lineage = checkpointLocation match {
+      case Some(c) => java.util.UUID.nameUUIDFromBytes(c.getBytes("UTF-8")).toString
+      case None => java.util.UUID.randomUUID().toString
     }
+    val conf = stream.sparkSession.sparkContext.hadoopConfiguration
+    val writer = stream.writeStream.outputMode(OutputMode.Update())
+    checkpointLocation.foreach(writer.option("checkpointLocation", _))
+    writer
+      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+        val marker = new Path(s"$markerDir/_batches/$lineage-$batchId")
+        val fs = marker.getFileSystem(conf)
+        if (!fs.exists(marker)) nonEmptyBatch(batch) { b =>
+          apply(b, marker)
+          fs.create(marker, true).close()
+          maintain(batchId)
+        }
+      }
+      .start()
+  }
+
+  /** The crash-window adjudication and write tail of the four index
+    * ingests. The append and the marker are two writes, so a marker-less
+    * batch may already be applied. Each of `indexIds` (name → one id
+    * column) is counted for the batch's `idCol` values:
+    *  - every table holds every id: an applied replay. With
+    *    `appendToIndex && selfHeal` it is skipped with a warning (the
+    *    caller then writes the marker);
+    *  - otherwise every count must be 0. A partial overlap is a replay
+    *    with rejects, a crash mid-append, or an id collision, and cannot
+    *    be told apart, so it fails loudly with the recovery path.
+    * Then the survivors (`survivorIds`, the ingest's probe, is only
+    * evaluated here) are materialized once, emitted, and appended when
+    * there are any and `appendToIndex` is set. */
+  private def indexGated(b: DataFrame, op: String, idCol: String, marker: Path,
+                         indexIds: Seq[(String, DataFrame)],
+                         survivorIds: => DataFrame,
+                         append: DataFrame => Unit,
+                         appendToIndex: Boolean, selfHeal: Boolean)
+                        (emit: DataFrame => Unit): Unit = {
+    val nBatch = b.select(idCol).distinct().count()
+    // batch side broadcast: the index side is a single-column scan
+    val bIds = broadcast(b.select(col(idCol).as("id")))
+    val present = indexIds.map { case (t, ids) =>
+      t -> ids.toDF("id").join(bIds, Seq("id"), "left_semi").distinct().count()
+    }
+    if (appendToIndex && selfHeal && present.forall(_._2 == nBatch))
+      warnSelfHeal(op, marker, nBatch)
+    else {
+      val found = present.map { case (t, n) => s"$n/$nBatch in $t" }.mkString(", ")
+      require(present.forall(_._2 == 0L),
+        s"$op: batch ids already in the stored index ($found) without this " +
+          "batch's replay marker — either an id-space collision (ids must be " +
+          "disjoint) or a crash after an earlier delivery of this batch " +
+          "began appending; after confirming the batch was applied to every " +
+          s"table, recover by creating $marker")
+      val (survivors, n) = graft.util.Views.materializeCounted(
+        b.join(survivorIds, Seq(idCol), "left_semi"))
+      emit(survivors)
+      if (appendToIndex && n > 0) append(survivors)
+    }
+  }
 
   /** Tumbling event-time window aggregate. On a stream, pair with
     * [[withWatermarked]] so state is dropped after `watermark`. */
@@ -169,28 +240,21 @@ object Streams {
     * and it rewrites content byte-identically (layout, not data), so the
     * replay markers stay valid. 0 disables.
     *
-    * REPLAY SAFETY (round 11 — the [[annIngest]]/[[rhpIngest]] marker
-    * protocol, previously missing here): appends are marker-gated per
-    * (checkpoint lineage, batchId). Without a marker, a checkpoint
-    * restart's redelivered batch used to WEDGE the ingest — its already-
-    * appended survivor ids trip the probe's id-disjointness guard (a
-    * loud crash, never corruption, but a crash on every restart replay).
-    * Now a marker-bearing replay is a no-op; a marker-less batch whose
-    * ids are ALL already indexed self-heals (the crash hit between
-    * append and marker — marker written, batch skipped, warning logged);
-    * partial presence fails loudly with the manual-recovery path, since
-    * a replay-with-rejects is indistinguishable from an id collision.
-    * CAVEAT (shared shape with annIngest's replay-with-rejects): docs
-    * whose text yields ZERO shingles leave no index trace, so a replayed
-    * batch that mixed shingled survivors with shingle-less docs (or with
-    * rejects) adjudicates as partial and takes the loud path — create
-    * the marker manually after confirming the batch applied. The
-    * self-heal only auto-fires when the evidence is unambiguous.
+    * Replay safety is [[markedBatches]] + [[indexGated]], adjudicated
+    * against the `shingles` table; without it, a replayed batch would
+    * trip the probe's id-disjointness guard on every restart. CAVEAT (shared
+    * shape with annIngest's replay-with-rejects): docs whose text yields
+    * ZERO shingles leave no index trace, so a replayed batch that mixed
+    * shingled survivors with shingle-less docs (or with rejects)
+    * adjudicates as partial and takes the loud path — create the marker
+    * manually after confirming the batch applied. A batch of only
+    * shingle-less docs counts as unindexed and re-probes: they trivially
+    * survive and append zero rows, which is harmless.
     *
-    * `selfHeal=false` (ADVICE r11) disables that adjudication for
-    * pipelines where an id-space violation must HALT ingest rather than
-    * warn: a marker-less full-overlap batch then takes the loud path
-    * like any partial overlap. Shared by all four ingest wrappers. */
+    * `selfHeal=false` disables the self-heal for pipelines where an
+    * id-space violation must HALT ingest rather than warn: a marker-less
+    * full-overlap batch then takes the loud path like any partial
+    * overlap. Shared by all four ingest wrappers. */
   def nearDupIngest(docs: DataFrame, indexDir: String, threshold: Double,
                     appendToIndex: Boolean = false,
                     checkpointLocation: Option[String] = None,
@@ -199,56 +263,20 @@ object Streams {
                     selfHeal: Boolean = true)
                    (emit: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
     val spark = docs.sparkSession
-    val lineage = checkpointLocation match {
-      case Some(c) => java.util.UUID.nameUUIDFromBytes(c.getBytes("UTF-8")).toString
-      case None => java.util.UUID.randomUUID().toString
+    markedBatches(docs, indexDir, checkpointLocation) { (b, marker) =>
+      val (bandE, shE) = graft.dedup.Dedup.readLshIndex(spark, indexDir)
+      indexGated(b, "nearDupIngest", "doc_id", marker,
+        Seq("shingles" -> shE.select("id")),
+        graft.dedup.Dedup.lshNewDocsAgainstIndex(
+          b, bandE, shE, "doc_id", "text", threshold,
+          guardDisjoint = false), // adjudicated against the same table
+        graft.dedup.Dedup.appendLshIndex(_, "doc_id", "text", indexDir),
+        appendToIndex, selfHeal)(emit)
+    } { batchId =>
+      if (appendToIndex && compactEvery > 0 && (batchId + 1) % compactEvery == 0)
+        Seq("bands", "shingles").foreach(t => graft.util.Maintenance
+          .compactInPlace(spark, s"$indexDir/$t", compactTargetBytes))
     }
-    val writer = docs.writeStream.outputMode(OutputMode.Update())
-    checkpointLocation.foreach(writer.option("checkpointLocation", _))
-    writer
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val marker = new org.apache.hadoop.fs.Path(
-          s"$indexDir/_batches/$lineage-$batchId")
-        val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        unmarkedBatch(fs, marker, batch) { b =>
-          val (bandE, shE) = graft.dedup.Dedup.readLshIndex(spark, indexDir)
-          // Crash-window adjudication (the annIngest shape): all batch
-          // ids already indexed = applied replay; none = first delivery;
-          // partial = undecidable, fail with the recovery path. (A batch
-          // of only shingle-less docs counts as unindexed and re-probes —
-          // they trivially survive and append zero rows: harmless.)
-          val nBatch = b.select("doc_id").distinct().count()
-          val nIndexed = shE.select("id")
-            .join(broadcast(b.select(col("doc_id").as("id"))),
-              Seq("id"), "left_semi")
-            .distinct().count()
-          if (appendToIndex && selfHeal && nIndexed == nBatch) {
-            warnSelfHeal("nearDupIngest", indexDir, lineage, batchId, nBatch)
-            fs.create(marker, true).close()
-          } else {
-            require(nIndexed == 0L,
-              s"nearDupIngest: $nIndexed of $nBatch batch doc ids already " +
-                "in the stored index without this batch's replay marker — " +
-                "either an id-space collision (ids must be disjoint) or a " +
-                "crash between append and marker on a batch with rejects; " +
-                s"after confirming the batch was applied, recover by creating $marker")
-            val survivorIds = graft.dedup.Dedup.lshNewDocsAgainstIndex(
-              b, bandE, shE, "doc_id", "text", threshold,
-              guardDisjoint = false) // adjudicated above, against the same table
-            val survivors = graft.util.Views.materialize(
-              b.join(survivorIds, Seq("doc_id"), "left_semi"))
-            emit(survivors)
-            if (appendToIndex)
-              graft.dedup.Dedup.appendLshIndex(survivors, "doc_id", "text", indexDir)
-            fs.create(marker, true).close()
-          }
-          if (appendToIndex && compactEvery > 0 &&
-              (batchId + 1) % compactEvery == 0)
-            Seq("bands", "shingles").foreach(t => graft.util.Maintenance
-              .compactInPlace(spark, s"$indexDir/$t", compactTargetBytes))
-        }
-      }
-      .start()
   }
 
   /** [[nearDupIngest]] over the BUCKETED, DICTIONARY-ENCODED index tier
@@ -260,9 +288,14 @@ object Streams {
     * survivors fold in through
     * [[graft.dedup.Dedup.appendLshIndexBucketed]] — shingles, bands,
     * dict extension, encoded rows — so the id-bucketed exchange-free
-    * probe plan survives every append. Marker/self-heal protocol is
-    * [[nearDupIngest]]'s verbatim (adjudication against the encoded
-    * `_shids` table; same shingle-less-doc caveat). `base` is a table
+    * probe plan survives every append. Replay safety is
+    * [[markedBatches]] + [[indexGated]], adjudicated against the FIRST-
+    * and LAST-written tables: `appendLshIndexBucketed` commits `shingles`
+    * first and the encoded `shids` rows last, so present-in-both proves
+    * the whole four-table append applied, and any other mix is loud
+    * (`shids` alone would let a replay silently skip a batch whose dict
+    * extension never committed). Same shingle-less-doc caveat as
+    * [[nearDupIngest]]. `base` is a table
     * base from [[graft.dedup.Dedup.writeLshIndexBucketed]] — NOT one
     * produced by the marker-gated ensure for registry queries, whose
     * write-once contract an appending stream would violate.
@@ -298,96 +331,45 @@ object Streams {
                             selfHeal: Boolean = true)
                            (emit: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
     val spark = docs.sparkSession
-    val lineage = checkpointLocation match {
-      case Some(c) => java.util.UUID.nameUUIDFromBytes(c.getBytes("UTF-8")).toString
-      case None => java.util.UUID.randomUUID().toString
-    }
+    val tables = Seq("shingles", "bands", "dict", "shids").map(p => s"${base}_$p")
     val warehouse = spark.conf.get("spark.sql.warehouse.dir")
-    val writer = docs.writeStream.outputMode(OutputMode.Update())
-    checkpointLocation.foreach(writer.option("checkpointLocation", _))
-    writer
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val marker = new org.apache.hadoop.fs.Path(
-          s"$warehouse/${base}_bands/_batches/$lineage-$batchId")
-        val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        unmarkedBatch(fs, marker, batch) { b =>
-          // Maintenance-enabled streams heal an interrupted rebucket
-          // BEFORE the first table read (ADVICE r12): a crash mid-swap
-          // leaves a live dir renamed to its bak, and the adjudication
-          // below would otherwise fail loudly on every restart until a
-          // human ran the recovery by hand.
-          if (rebucketFilesPerBucket > 0)
-            Seq("shingles", "bands", "dict", "shids").foreach(p =>
-              graft.util.Maintenance.recoverTable(spark, s"${base}_$p"))
-          // All catalog reads go through the BATCH's session: foreachBatch
-          // runs in a session CLONE whose writes refresh only its own
-          // relation cache, so the stream must read what it wrote through
-          // that same session (the outer session is refreshed after each
-          // append below, for external observers).
-          val bs = b.sparkSession
-          // Defensive refresh BEFORE any read: the micro-batch session is
-          // a clone created at stream start, and a prior batch's appends
-          // are not reliably visible through its cached relations (seen
-          // empirically: a stale dict at batch 2 re-assigned sids to
-          // batch-1's new shingles and fanned out the encode join).
-          Seq("shingles", "bands", "dict", "shids").foreach(p =>
-            bs.catalog.refreshTable(s"${base}_$p"))
-          val nBatch = b.select("doc_id").distinct().count()
-          // Adjudicate against the FIRST- and LAST-written tables (the
-          // rhpIngest two-table discipline): appendLshIndexBucketed
-          // commits shingles first and the encoded rows last, so
-          // present-in-both proves the whole four-table append applied;
-          // any other mix is a crash mid-append (or id collision) and
-          // must be loud — checking shids alone would let a replay
-          // silently skip a batch whose dict extension never committed.
-          val bIds = broadcast(b.select(col("doc_id").as("id")).distinct())
-          def present(t: String): Long =
-            bs.table(t).select("id").join(bIds, Seq("id"), "left_semi")
-              .distinct().count()
-          val (inShing, inShids) =
-            (present(s"${base}_shingles"), present(s"${base}_shids"))
-          if (appendToIndex && selfHeal && inShing == nBatch && inShids == nBatch) {
-            warnSelfHeal("nearDupIngestBucketed", base, lineage, batchId, nBatch)
-            fs.create(marker, true).close()
-          } else {
-            require(inShing == 0L && inShids == 0L,
-              s"nearDupIngestBucketed: $inShing/$nBatch batch doc ids in " +
-                s"shingles, $inShids/$nBatch in shids without this batch's " +
-                "replay marker — either an id-space collision (ids must be " +
-                "disjoint) or a crash mid-append; after reconciling the " +
-                s"four tables, recover by creating $marker")
-            val survivorIds = graft.dedup.Dedup.lshNewDocsAgainstIndexEncoded(
-              b, base, "doc_id", "text", threshold,
-              guardDisjoint = false) // adjudicated above, against the same table
-            val survivors = graft.util.Views.materialize(
-              b.join(survivorIds, Seq("doc_id"), "left_semi"))
-            emit(survivors)
-            if (appendToIndex && !survivors.isEmpty) {
-              graft.dedup.Dedup.appendLshIndexBucketed(
-                survivors, base, "doc_id", "text")
-              // Invalidate the OUTER session's cached relations so readers
-              // outside the stream see the appended files (cross-session
-              // staleness is standard Spark table semantics — any OTHER
-              // session still owns its own REFRESH TABLE).
-              Seq("shingles", "bands", "dict", "shids").foreach(p =>
-                spark.catalog.refreshTable(s"${base}_$p"))
-            }
-            fs.create(marker, true).close()
-          }
-          if (appendToIndex && rebucketFilesPerBucket > 0 &&
-              Seq("shingles", "bands", "dict", "shids").exists(p =>
-                graft.util.Maintenance.filesPerBucket(spark, s"${base}_$p")
-                  >= rebucketFilesPerBucket)) {
-            Seq("shingles", "bands", "dict", "shids").foreach { p =>
-              graft.util.Maintenance.rebucketTable(spark, s"${base}_$p")
-              // rebucketTable refreshed the outer session; the stream's
-              // clone reads through its own relation cache.
-              bs.catalog.refreshTable(s"${base}_$p")
-            }
-          }
-        }
-      }
-      .start()
+    markedBatches(docs, s"$warehouse/${base}_bands", checkpointLocation) { (b, marker) =>
+      // Maintenance-enabled streams heal an interrupted rebucket BEFORE
+      // the first table read: a crash mid-swap leaves a live dir renamed
+      // to its bak, and the adjudication would otherwise fail loudly on
+      // every restart until a human ran the recovery by hand.
+      if (rebucketFilesPerBucket > 0)
+        tables.foreach(graft.util.Maintenance.recoverTable(spark, _))
+      // All catalog reads go through the BATCH's session: foreachBatch
+      // runs in a session CLONE whose writes refresh only its own
+      // relation cache, so the stream must read what it wrote through
+      // that same session. Refreshed BEFORE any read: a prior batch's
+      // appends (or a rebucket swap) are not reliably visible through
+      // the clone's cached relations (seen empirically: a stale dict at
+      // batch 2 re-assigned sids to batch-1's new shingles and fanned
+      // out the encode join).
+      val bs = b.sparkSession
+      tables.foreach(bs.catalog.refreshTable)
+      indexGated(b, "nearDupIngestBucketed", "doc_id", marker,
+        Seq("shingles", "shids").map(p => p -> bs.table(s"${base}_$p").select("id")),
+        graft.dedup.Dedup.lshNewDocsAgainstIndexEncoded(
+          b, base, "doc_id", "text", threshold,
+          guardDisjoint = false), // adjudicated against the same table
+        { survivors =>
+          graft.dedup.Dedup.appendLshIndexBucketed(survivors, base, "doc_id", "text")
+          // Invalidate the OUTER session's cached relations so readers
+          // outside the stream see the appended files (any OTHER session
+          // still owns its own REFRESH TABLE).
+          tables.foreach(spark.catalog.refreshTable)
+        },
+        appendToIndex, selfHeal)(emit)
+    } { _ =>
+      // rebucketTable refreshes the outer session; the stream's clone is
+      // refreshed at the next batch's entry, before it reads.
+      if (appendToIndex && rebucketFilesPerBucket > 0 &&
+          tables.exists(graft.util.Maintenance.filesPerBucket(spark, _) >= rebucketFilesPerBucket))
+        tables.foreach(graft.util.Maintenance.rebucketTable(spark, _))
+    }
   }
 
   /** Streaming ANN-INDEX ingest against a STORED IVF-PQ index — the
@@ -406,17 +388,12 @@ object Streams {
     * generations) and appended to rows/, so later micro-batches gate
     * against everything accepted so far. NO streaming engine state: the
     * index on durable storage IS the state (the [[nearDupIngest]]
-    * discipline). Appends are MARKER-GATED per (checkpoint lineage,
-    * batchId) like [[cdcApply]]: a marker-bearing replay is a no-op. The
-    * append and its marker are two writes, so a crash BETWEEN them
-    * leaves applied rows with no marker; the replay then finds every
-    * batch id already indexed and self-heals (writes the marker, skips)
-    * — while a PARTIAL overlap (some batch ids indexed, some not: a
-    * replay whose original batch had rejects, or a genuine id-space
-    * collision) fails loudly with the manual-recovery path (create the
-    * marker by hand after confirming the batch was applied) instead of
-    * guessing. Batch ids must otherwise be disjoint from indexed
-    * vec_ids — a collision would corrupt the identity space.
+    * discipline). Replay safety is [[markedBatches]] + [[indexGated]],
+    * adjudicated against `rows`. A replay whose original batch had
+    * rejects leaves only its survivors indexed, so it adjudicates as
+    * partial and takes the loud path. Batch ids must otherwise be
+    * disjoint from indexed vec_ids — a collision would corrupt the
+    * identity space.
     *
     * Survivors within one micro-batch are gated against the STORED index
     * only, never against each other — two mutual near-dups arriving in
@@ -431,65 +408,25 @@ object Streams {
                 selfHeal: Boolean = true)
                (emit: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
     val spark = vectors.sparkSession
-    val lineage = checkpointLocation match {
-      case Some(c) => java.util.UUID.nameUUIDFromBytes(c.getBytes("UTF-8")).toString
-      case None => java.util.UUID.randomUUID().toString
+    markedBatches(vectors, indexDir, checkpointLocation) { (b, marker) =>
+      val rows = graft.Sources.parquet(spark, s"$indexDir/rows")
+      val coarse = graft.Sources.parquet(spark, s"$indexDir/coarse")
+      val book = graft.Sources.parquet(spark, s"$indexDir/book")
+      indexGated(b, "annIngest", "id", marker,
+        Seq("rows" -> rows.select("vec_id")),
+        b.select("id").join(graft.sim.Similarity
+          .ivfPqMaxSim(b, rows, coarse, book)
+          .filter(col("max_asim") >= threshold)
+          .select(col("query_id").as("id")), Seq("id"), "left_anti"),
+        graft.sim.Similarity.ivfPqIndexWith(_, coarse, book)
+          .write.mode("append").parquet(s"$indexDir/rows"),
+        appendToIndex, selfHeal)(emit)
+    } { batchId =>
+      // Small-file maintenance (see nearDupIngest's compactEvery doc).
+      if (appendToIndex && compactEvery > 0 && (batchId + 1) % compactEvery == 0)
+        graft.util.Maintenance.compactInPlace(
+          spark, s"$indexDir/rows", compactTargetBytes)
     }
-    val writer = vectors.writeStream.outputMode(OutputMode.Update())
-    checkpointLocation.foreach(writer.option("checkpointLocation", _))
-    writer
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val marker = new org.apache.hadoop.fs.Path(
-          s"$indexDir/_batches/$lineage-$batchId")
-        val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        unmarkedBatch(fs, marker, batch) { b =>
-          val rows = graft.Sources.parquet(spark, s"$indexDir/rows")
-          val coarse = graft.Sources.parquet(spark, s"$indexDir/coarse")
-          val book = graft.Sources.parquet(spark, s"$indexDir/book")
-          // Crash-window self-heal: append and marker are two writes. A
-          // marker-missing batch whose ids are ALL already indexed is an
-          // already-applied replay — re-write the marker and skip (never
-          // re-append). Partial overlap is undecidable (replay-with-
-          // rejects vs id collision): fail with the recovery path.
-          // (batch side broadcast — the index side is a single-column
-          // scan, never shuffled)
-          val nBatch = b.select("id").distinct().count()
-          val nIndexed = rows.select("vec_id")
-            .join(broadcast(b.select(col("id").as("vec_id"))),
-              Seq("vec_id"), "left_semi")
-            .distinct().count()
-          if (appendToIndex && selfHeal && nIndexed == nBatch) {
-            warnSelfHeal("annIngest", indexDir, lineage, batchId, nBatch)
-            fs.create(marker, true).close()
-          } else {
-            require(nIndexed == 0L,
-              s"annIngest: $nIndexed of $nBatch batch ids already in the " +
-                "stored index without this batch's replay marker — either " +
-                "an id-space collision (ids must be disjoint) or a crash " +
-                "between append and marker on a batch with rejects; after " +
-                s"confirming the batch was applied, recover by creating $marker")
-            val rejected = graft.sim.Similarity
-              .ivfPqMaxSim(b, rows, coarse, book)
-              .filter(col("max_asim") >= threshold)
-              .select(col("query_id").as("id"))
-            val survivors = graft.util.Views.materialize(
-              b.join(rejected, Seq("id"), "left_anti"))
-            emit(survivors)
-            if (appendToIndex && !survivors.isEmpty)
-              graft.sim.Similarity.ivfPqIndexWith(survivors, coarse, book)
-                .write.mode("append").parquet(s"$indexDir/rows")
-            fs.create(marker, true).close()
-          }
-          // Small-file maintenance (see nearDupIngest's compactEvery doc):
-          // on the foreachBatch thread — serialized with appends, content-
-          // preserving, so replay markers stay valid.
-          if (appendToIndex && compactEvery > 0 &&
-              (batchId + 1) % compactEvery == 0)
-            graft.util.Maintenance.compactInPlace(
-              spark, s"$indexDir/rows", compactTargetBytes)
-        }
-      }
-      .start()
   }
 
   /** Streaming RHP-index ingest — the BANDING tier's maintenance twin
@@ -500,15 +437,13 @@ object Streams {
     * published rows/ + sketches/ artifacts alone — and `emit` receives
     * the survivors. With `appendToIndex=true` survivors' band rows AND
     * sketches append to the artifact (both are deterministic row-local
-    * projections — no quantizer to freeze). Marker-gated per (lineage,
-    * batchId); batch/index id spaces checked disjoint against BOTH
-    * stored tables (rows/ is written first, so a crash between the two
-    * appends leaves band rows without sketches — checking sketches alone
-    * would let the replay silently re-append those band rows, because
-    * the hamming gate's inner join against sketches drops sketch-less
-    * candidates). A replay whose ids are all present in BOTH tables
-    * self-heals (marker written, batch skipped); any partial presence
-    * fails loudly with the manual-recovery path. Intra-batch duplicates
+    * projections — no quantizer to freeze). Replay safety is
+    * [[markedBatches]] + [[indexGated]], adjudicated against BOTH stored
+    * tables: rows/ is written first, so a crash between the two appends
+    * leaves band rows without sketches — checking sketches alone would
+    * let the replay silently re-append those band rows, because the
+    * hamming gate's inner join against sketches drops sketch-less
+    * candidates. Intra-batch duplicates
     * are admitted by design (the [[annIngest]]/[[nearDupIngest]]
     * contract — survivors gate against the stored index only). Zero
     * engine state: the index on durable storage IS the state. */
@@ -520,62 +455,25 @@ object Streams {
                 selfHeal: Boolean = true)
                (emit: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
     val spark = vectors.sparkSession
-    val lineage = checkpointLocation match {
-      case Some(c) => java.util.UUID.nameUUIDFromBytes(c.getBytes("UTF-8")).toString
-      case None => java.util.UUID.randomUUID().toString
+    markedBatches(vectors, indexDir, checkpointLocation) { (b, marker) =>
+      val bandIdx = graft.Sources.parquet(spark, s"$indexDir/rows")
+      val sks = graft.Sources.parquet(spark, s"$indexDir/sketches")
+      indexGated(b, "rhpIngest", "id", marker,
+        Seq("rows" -> bandIdx.select("vec_id"), "sketches" -> sks.select("vec_id")),
+        graft.sim.Similarity.rhpNewVecsAgainstIndex(b, bandIdx, sks, maxHamming),
+        { survivors =>
+          graft.sim.Similarity.rhpBandIndex(survivors)
+            .write.mode("append").parquet(s"$indexDir/rows")
+          graft.sim.Similarity.rhpSketches(survivors)
+            .write.mode("append").parquet(s"$indexDir/sketches")
+        },
+        appendToIndex, selfHeal)(emit)
+    } { batchId =>
+      // Small-file maintenance (see nearDupIngest's compactEvery doc).
+      if (appendToIndex && compactEvery > 0 && (batchId + 1) % compactEvery == 0)
+        Seq("rows", "sketches").foreach(t => graft.util.Maintenance
+          .compactInPlace(spark, s"$indexDir/$t", compactTargetBytes))
     }
-    val writer = vectors.writeStream.outputMode(OutputMode.Update())
-    checkpointLocation.foreach(writer.option("checkpointLocation", _))
-    writer
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val marker = new org.apache.hadoop.fs.Path(
-          s"$indexDir/_batches/$lineage-$batchId")
-        val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        unmarkedBatch(fs, marker, batch) { b =>
-          val bandIdx = graft.Sources.parquet(spark, s"$indexDir/rows")
-          val sks = graft.Sources.parquet(spark, s"$indexDir/sketches")
-          // Disjointness against BOTH stored tables (rows/ is written
-          // first — orphaned band rows from a crash between the two
-          // appends must be detected, not silently re-appended), with
-          // the annIngest crash-window self-heal: all-present in both =
-          // applied replay; anything partial = loud failure.
-          val bIds = broadcast(b.select(col("id").as("vec_id")).distinct())
-          def present(t: org.apache.spark.sql.DataFrame): Long =
-            t.select("vec_id").join(bIds, Seq("vec_id"), "left_semi")
-              .distinct().count()
-          val nBatch = b.select("id").distinct().count()
-          val (inRows, inSks) = (present(bandIdx), present(sks))
-          if (appendToIndex && selfHeal && inRows == nBatch && inSks == nBatch) {
-            warnSelfHeal("rhpIngest", indexDir, lineage, batchId, nBatch)
-            fs.create(marker, true).close()
-          } else {
-            require(inRows == 0L && inSks == 0L,
-              s"rhpIngest: $inRows/$nBatch batch ids in rows/, " +
-                s"$inSks/$nBatch in sketches/ without this batch's replay " +
-                "marker — either an id-space collision (ids must be " +
-                "disjoint) or a crash mid-append; after reconciling the " +
-                s"two tables, recover by creating $marker")
-            val survivorIds = graft.sim.Similarity
-              .rhpNewVecsAgainstIndex(b, bandIdx, sks, maxHamming)
-            val survivors = graft.util.Views.materialize(
-              b.join(survivorIds, Seq("id"), "left_semi"))
-            emit(survivors)
-            if (appendToIndex && !survivors.isEmpty) {
-              graft.sim.Similarity.rhpBandIndex(survivors)
-                .write.mode("append").parquet(s"$indexDir/rows")
-              graft.sim.Similarity.rhpSketches(survivors)
-                .write.mode("append").parquet(s"$indexDir/sketches")
-            }
-            fs.create(marker, true).close()
-          }
-          // Small-file maintenance (see nearDupIngest's compactEvery doc).
-          if (appendToIndex && compactEvery > 0 &&
-              (batchId + 1) % compactEvery == 0)
-            Seq("rows", "sketches").foreach(t => graft.util.Maintenance
-              .compactInPlace(spark, s"$indexDir/$t", compactTargetBytes))
-        }
-      }
-      .start()
   }
 
   /** Streaming CDC apply into the versioned
@@ -588,16 +486,8 @@ object Streams {
     * advance per micro-batch, so the store's time travel gives replayable
     * PER-BATCH history of the stream.
     *
-    * Replay safety: a `_batches/<lineage>-<batchId>` marker (written
-    * after the commit) makes re-delivered micro-batches no-ops. The
-    * lineage tag is derived from `checkpointLocation` when given —
-    * batchIds are only meaningful WITHIN one checkpoint lineage, so a
-    * restarted query on the same checkpoint (same tag, continuing
-    * batchIds) dedups correctly, while a FRESH stream on the same store
-    * (new tag) can never be suppressed by a previous run's markers.
-    * Without a checkpoint the tag is unique per start() — re-delivery
-    * cannot happen without persisted offsets, so dedup is moot. In the
-    * crash window between commit-marker and batch-marker a replay
+    * Replay safety is [[markedBatches]]: the batch marker lands after
+    * the commit. In the crash window between the two, a replay
     * re-commits the SAME change rows as a new version, which latest-wins
     * folding makes state-idempotent — the as-of-latest table is
     * unchanged, only the version history carries the duplicate. No
@@ -605,30 +495,13 @@ object Streams {
     * state (the nearDupIngest discipline). */
   def cdcApply(changes: DataFrame, storeDir: String, idCol: String,
                checkpointLocation: Option[String] = None)
-              : org.apache.spark.sql.streaming.StreamingQuery = {
-    val spark = changes.sparkSession
-    val lineage = checkpointLocation match {
-      case Some(c) => java.util.UUID.nameUUIDFromBytes(c.getBytes("UTF-8")).toString
-      case None => java.util.UUID.randomUUID().toString
-    }
-    val writer = changes.writeStream
-      .outputMode(OutputMode.Update())
-    checkpointLocation.foreach(writer.option("checkpointLocation", _))
-    writer
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val marker = new org.apache.hadoop.fs.Path(
-          s"$storeDir/_batches/$lineage-$batchId")
-        val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        unmarkedBatch(fs, marker, batch) { b =>
-          val ups = b.filter(col("op") =!= "d").drop("op")
-          val dels = b.filter(col("op") === "d").select(col(idCol))
-          graft.sources.SnapshotStore.commit(ups,
-            if (dels.isEmpty) None else Some(dels), storeDir, idCol)
-          fs.create(marker, true).close()
-        }
-      }
-      .start()
-  }
+              : org.apache.spark.sql.streaming.StreamingQuery =
+    markedBatches(changes, storeDir, checkpointLocation) { (b, _) =>
+      val ups = b.filter(col("op") =!= "d").drop("op")
+      val dels = b.filter(col("op") === "d").select(col(idCol))
+      graft.sources.SnapshotStore.commit(ups,
+        if (dels.isEmpty) None else Some(dels), storeDir, idCol)
+    }(_ => ())
 
   /** Merge one micro-batch's day-grain partials into the STREAM-
     * MAINTAINED events MV (round 12, VERDICT r11 #3): `fresh` is
@@ -674,9 +547,9 @@ object Streams {
     * micro-batch boundary (the spec asserts streamed-refresh ≡ batch
     * recompute at EVERY version). Zero streaming-engine state — the
     * durable store IS the state (the nearDupIngest discipline). Replays
-    * are marker-gated per (checkpoint lineage, batchId) because counter
-    * sums double-count ([[cdcApply]]'s protocol, same crash-window trade
-    * as [[mgRollup]]). Read path: [[graft.plans.Mv.liveEventsDay]].
+    * go through [[markedBatches]] because counter sums double-count
+    * (same crash-window trade as [[mgRollup]]). Read path:
+    * [[graft.plans.Mv.liveEventsDay]].
     *
     * LOG MAINTENANCE (round 13, VERDICT r12 #5 + ADVICE r12): without
     * it, every [[mergeEventsDayMv]] folds ONE upsert file set per prior
@@ -696,34 +569,21 @@ object Streams {
                      retainVersions: Int = 0)
                     : org.apache.spark.sql.streaming.StreamingQuery = {
     val spark = events.sparkSession
-    val lineage = checkpointLocation match {
-      case Some(c) => java.util.UUID.nameUUIDFromBytes(c.getBytes("UTF-8")).toString
-      case None => java.util.UUID.randomUUID().toString
-    }
-    val writer = events.writeStream.outputMode(OutputMode.Update())
-    checkpointLocation.foreach(writer.option("checkpointLocation", _))
-    writer
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val marker = new org.apache.hadoop.fs.Path(
-          s"$storeDir/_batches/$lineage-$batchId")
-        val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (!fs.exists(marker) && !batch.isEmpty) {
-          mergeEventsDayMv(graft.plans.Mv.dayAgg(batch.toDF()), storeDir)
-          fs.create(marker, true).close()
-          if (compactEvery > 0 && (batchId + 1) % compactEvery == 0) {
-            val vs = graft.sources.SnapshotStore
-              .committedVersions(spark, storeDir)
-            if (vs.nonEmpty && !graft.sources.SnapshotStore
-                .compactedVersions(spark, storeDir).contains(vs.last))
-              graft.sources.SnapshotStore
-                .compact(spark, storeDir, "mv_key", vs.last)
-          }
-          if (retainVersions > 0)
-            graft.sources.SnapshotStore
-              .retain(spark, storeDir, "mv_key", retainVersions)
-        }
+    markedBatches(events, storeDir, checkpointLocation) { (b, _) =>
+      mergeEventsDayMv(graft.plans.Mv.dayAgg(b), storeDir)
+    } { batchId =>
+      if (compactEvery > 0 && (batchId + 1) % compactEvery == 0) {
+        val vs = graft.sources.SnapshotStore
+          .committedVersions(spark, storeDir)
+        if (vs.nonEmpty && !graft.sources.SnapshotStore
+            .compactedVersions(spark, storeDir).contains(vs.last))
+          graft.sources.SnapshotStore
+            .compact(spark, storeDir, "mv_key", vs.last)
       }
-      .start()
+      if (retainVersions > 0)
+        graft.sources.SnapshotStore
+          .retain(spark, storeDir, "mv_key", retainVersions)
+    }
   }
 
   /** Merge a batch's per-day KMV sketches into the stored sketch table
@@ -775,9 +635,9 @@ object Streams {
                : org.apache.spark.sql.streaming.StreamingQuery =
     events.writeStream
       .outputMode(OutputMode.Update())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        if (!batch.isEmpty) {
-          val fresh = batch.toDF()
+      .foreachBatch { (batch: Dataset[Row], _: Long) =>
+        nonEmptyBatch(batch) { b =>
+          val fresh = b
             .select(expr("ts div 86400000000000").as("day"),
               col("user_id").cast("string").as("u"))
             .groupBy("day").agg(expr(s"kmv_agg(u, $k)").as("kmv"))
@@ -831,9 +691,9 @@ object Streams {
                : org.apache.spark.sql.streaming.StreamingQuery =
     events.writeStream
       .outputMode(OutputMode.Update())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        if (!batch.isEmpty) {
-          val fresh = batch.toDF()
+      .foreachBatch { (batch: Dataset[Row], _: Long) =>
+        nonEmptyBatch(batch) { b =>
+          val fresh = b
             .select(expr("ts div 86400000000000").as("day"), col("user_id"))
             .groupBy("day").agg(expr(s"hll_sketch_agg(user_id, $lgK)").as("sk"))
           mergeHllStore(fresh, storeDir)
@@ -897,41 +757,23 @@ object Streams {
     * store alone with the N/(capacity+1) superset guarantee intact
     * (errors add across merges per "Mergeable Summaries").
     *
-    * Counter sums are NOT idempotent, so at-least-once delivery needs
-    * the [[cdcApply]] marker discipline: a per-lineage batch-id marker
-    * lands AFTER the store commit, and a replayed micro-batch that finds
-    * its marker is skipped. In the crash window between commit and
-    * marker a replay double-merges — the bound degrades by that batch's
-    * N but the sketch stays a valid candidate generator, and phase-2
-    * exact recounts (the text_heavy_hitters discipline) are unaffected.
+    * Counter sums are NOT idempotent, so at-least-once delivery goes
+    * through [[markedBatches]]: the batch marker lands AFTER the store
+    * commit, and a replay that finds it is skipped. In the crash window
+    * between commit and marker a replay double-merges — the bound
+    * degrades by that batch's N but the sketch stays a valid candidate
+    * generator, and phase-2 exact recounts (the text_heavy_hitters discipline) are unaffected.
     * Zero streaming-engine state — the durable store IS the state. */
   def mgRollup(events: DataFrame, storeDir: String, capacity: Int = 16,
                checkpointLocation: Option[String] = None)
-              : org.apache.spark.sql.streaming.StreamingQuery = {
-    val spark = events.sparkSession
-    val lineage = checkpointLocation match {
-      case Some(c) => java.util.UUID.nameUUIDFromBytes(c.getBytes("UTF-8")).toString
-      case None => java.util.UUID.randomUUID().toString
-    }
-    val writer = events.writeStream
-      .outputMode(OutputMode.Update())
-    checkpointLocation.foreach(writer.option("checkpointLocation", _))
-    writer
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val marker = new org.apache.hadoop.fs.Path(
-          s"$storeDir/_batches/$lineage-$batchId")
-        val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (!fs.exists(marker) && !batch.isEmpty) {
-          val fresh = batch.toDF()
-            .select(expr("ts div 86400000000000").as("day"),
-              col("user_id").cast("string").as("u"))
-            .groupBy("day").agg(expr(s"mg_sketch(u, $capacity)").as("mg"))
-          mergeMgStore(fresh, storeDir, capacity)
-          fs.create(marker, true).close()
-        }
-      }
-      .start()
-  }
+              : org.apache.spark.sql.streaming.StreamingQuery =
+    markedBatches(events, storeDir, checkpointLocation) { (b, _) =>
+      val fresh = b
+        .select(expr("ts div 86400000000000").as("day"),
+          col("user_id").cast("string").as("u"))
+        .groupBy("day").agg(expr(s"mg_sketch(u, $capacity)").as("mg"))
+      mergeMgStore(fresh, storeDir, capacity)
+    }(_ => ())
 
   /** Watermarked STREAM-STREAM interval join — conversion attribution on
     * two live streams: each click matches the purchases of the same user
@@ -1025,8 +867,8 @@ object Streams {
     withWatermarked(events, watermark)
       .writeStream
       .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        if (!batch.isEmpty) idempotentWindowSink(batch.toDF(), path)
+      .foreachBatch { (batch: Dataset[Row], _: Long) =>
+        nonEmptyBatch(batch)(idempotentWindowSink(_, path))
       }
       .start()
 

@@ -51,4 +51,34 @@ class SourceLintSpec extends AnyFunSuite {
     val bad = offenders("SparkSession\\s*\\.\\s*builder\\b", "graft/GraftSession.scala")
     assert(bad.isEmpty, s"SparkSession.builder() outside GraftSession in: ${bad.mkString(", ")}")
   }
+
+  private val streams = "graft/streaming/Streams.scala"
+  private lazy val streamsCode = sources.collectFirst { case (`streams`, c) => c }.get
+
+  test("stream batch lineage and marker paths are derived only in Streams.markedBatches") {
+    val pattern = "nameUUIDFromBytes|_batches/"
+    val bad = offenders(pattern, streams)
+    assert(bad.isEmpty, s"batch lineage or marker path outside Streams in: ${bad.mkString(", ")}")
+    val start = streamsCode.indexOf("def markedBatches")
+    assert(start >= 0, "Streams.markedBatches is gone")
+    val end = "\\n\\s*(private\\s+)?def\\s".r.findFirstMatchIn(streamsCode.substring(start))
+      .map(start + _.start).getOrElse(streamsCode.length)
+    val outside = pattern.r.findAllMatchIn(streamsCode).filter(m => m.start < start || m.start >= end)
+    assert(outside.isEmpty, "batch lineage or marker path in Streams outside markedBatches")
+  }
+
+  test("the index-ingest self-heal is decided in one place") {
+    val calls = sources.map { case (_, code) =>
+      "warnSelfHeal\\s*\\(".r.findAllIn(code).size - "def\\s+warnSelfHeal\\b".r.findAllIn(code).size
+    }.sum
+    assert(calls === 1, s"warnSelfHeal( is called $calls times, expected once (in indexGated)")
+  }
+
+  test("no foreachBatch batch in Streams is probed with isEmpty before its read") {
+    val names = "foreachBatch\\s*\\{\\s*\\(\\s*(\\w+)\\s*:".r
+      .findAllMatchIn(streamsCode).map(_.group(1)).toSet
+    assert(names.nonEmpty, "no foreachBatch sites found in Streams")
+    val bad = names.filter(n => s"\\b$n\\s*\\.\\s*isEmpty\\b".r.findFirstIn(streamsCode).isDefined)
+    assert(bad.isEmpty, s"isEmpty on a foreachBatch batch (${bad.mkString(", ")}) reads it twice")
+  }
 }
