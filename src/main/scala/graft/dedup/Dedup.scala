@@ -3,6 +3,12 @@ package graft.dedup
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+/** One incremental LSH probe ([[Dedup.lshProbe]]): the batch's
+  * surviving ids (`doc_id`, lazy) and the batch's materialized
+  * (id, sh) shingle and (id, band_idx, band_key) band views it judged
+  * them from. */
+final case class LshProbe(survivorIds: DataFrame, shingles: DataFrame, bands: DataFrame)
+
 /** Document deduplication for large-scale training-data pipelines — the
   * north-star extension surface beyond the reference's own operators
   * (SURVEY.md §7.3-5). Three tiers, each the standard shape used at
@@ -426,7 +432,17 @@ object Dedup {
     * false when the caller already guarded the full frames). */
   def lshNewDocsAgainstIndex(batch: DataFrame, bandE: DataFrame, shE: DataFrame,
                              idCol: String, textCol: String, threshold: Double,
-                             guardDisjoint: Boolean = true): DataFrame = {
+                             guardDisjoint: Boolean = true): DataFrame =
+    lshProbe(batch, bandE, shE, idCol, textCol, threshold, guardDisjoint).survivorIds
+
+  /** [[lshNewDocsAgainstIndex]], also handing back the batch's
+    * materialized (id, sh) shingle and (id, band_idx, band_key) band
+    * views, so an ingest appends its survivors to the index from them
+    * ([[appendLshIndex]]) instead of shingling and minhashing the same
+    * documents again. */
+  def lshProbe(batch: DataFrame, bandE: DataFrame, shE: DataFrame,
+               idCol: String, textCol: String, threshold: Double,
+               guardDisjoint: Boolean = true): LshProbe = {
     if (guardDisjoint)
       require(shE.select("id")
           .join(broadcast(batch.select(col(idCol).as("id"))), Seq("id"), "left_semi")
@@ -442,8 +458,9 @@ object Dedup {
     // un-clustered probe shipping 863 MB — mostly this stage).
     val shB = graft.util.Views.materializeTruncated(
       shingleRows(batch.repartition(col(idCol)), idCol, textCol))
-    probeVerify(batch.select(col(idCol).as("doc_id")),
-      bandRowsFromShingles(shB), bandE, shB, shE, threshold)
+    val bB = bandRowsFromShingles(shB)
+    LshProbe(probeVerify(batch.select(col(idCol).as("doc_id")),
+      bB, bandE, shB, shE, threshold), shB, bB)
   }
 
   /** The candidate-generation + pair-keyed-verification core of the
@@ -464,10 +481,12 @@ object Dedup {
     val candB = bB.as("a").join(bB.as("b"), bandMatch && col("b.id") < col("a.id"))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
     val cand = graft.util.Views.materializeTruncated(candE.union(candB).distinct())
-    val shProbe = shB.join(cand.select(col("id_a").as("id")).distinct(), "id")
+    // Only the partner side needs restricting: the batch side is
+    // batch-sized, and the joins through `cand` below already keep just
+    // the probing docs' rows and counts.
     val shPartner = shB.unionByName(shE)
-      .join(cand.select(col("id_b").as("id")).distinct(), "id")
-    val nA = shProbe.groupBy("id").agg(count(lit(1)).as("n_a"))
+      .join(cand.select(col("id_b").as("id")), Seq("id"), "left_semi")
+    val nA = shB.groupBy("id").agg(count(lit(1)).as("n_a"))
       .withColumnRenamed("id", "id_a")
     val nB = shPartner.groupBy("id").agg(count(lit(1)).as("n_b"))
       .withColumnRenamed("id", "id_b")
@@ -478,12 +497,12 @@ object Dedup {
     // self-join (a hot shingle shared by many partner docs made the old
     // shape quadratic at corpus scale).
     val rejected = cand
-      .join(shProbe.select(col("id").as("id_a"), col("sh")), "id_a")
+      .join(shB.select(col("id").as("id_a"), col("sh")), "id_a")
       .join(shPartner.select(col("id").as("id_b"), col("sh")), Seq("id_b", "sh"))
       .groupBy("id_a", "id_b").agg(count(lit(1)).as("n_common"))
       .join(nA, "id_a").join(nB, "id_b")
       .filter(col("n_common") / (col("n_a") + col("n_b") - col("n_common")) >= threshold)
-      .select(col("id_a").as("doc_id")).distinct()
+      .select(col("id_a").as("doc_id"))
     batchIds.join(rejected, Seq("doc_id"), "left_anti")
   }
 
@@ -610,12 +629,21 @@ object Dedup {
     * accepted batch's bands/shingles join the index so LATER batches
     * near-dedup against it; the index is never rebuilt. (Parquet append
     * = new files alongside old; at 100 TB this is the same
-    * partition-append every warehouse sink does.) */
-  def appendLshIndex(docs: DataFrame, idCol: String, textCol: String,
+    * partition-append every warehouse sink does.)
+    *
+    * The rows come from the `probe` that judged the batch: its band and
+    * shingle views, kept to the `survivors`' `idCol` values — exactly
+    * the rows [[writeLshIndex]] would derive for those documents, with
+    * no second shingling or minhash pass. `bands` is written before
+    * `shingles`, so `shingles` is the last-written table, the one a
+    * replay is adjudicated against. */
+  def appendLshIndex(probe: LshProbe, survivors: DataFrame, idCol: String,
                      dir: String): Unit = {
-    val sh = graft.util.Views.materialize(shingleRows(docs, idCol, textCol))
-    bandRowsFromShingles(sh).write.mode("append").parquet(s"$dir/bands")
-    sh.write.mode("append").parquet(s"$dir/shingles")
+    val ids = broadcast(survivors.select(col(idCol).as("id")))
+    probe.bands.join(ids, Seq("id"), "left_semi")
+      .write.mode("append").parquet(s"$dir/bands")
+    probe.shingles.join(ids, Seq("id"), "left_semi")
+      .write.mode("append").parquet(s"$dir/shingles")
   }
 
   /** (band index, shingle store) readers for a [[writeLshIndex]] dir,

@@ -115,7 +115,8 @@ object Streams {
   /** The crash-window adjudication and write tail of the four index
     * ingests. The append and the marker are two writes, so a marker-less
     * batch may already be applied. Each of `indexIds` (name → one id
-    * column) is counted for the batch's `idCol` values:
+    * column) is counted for the batch's distinct `idCol` values, all in
+    * one aggregate:
     *  - every table holds every id: an applied replay. With
     *    `appendToIndex && selfHeal` it is skipped with a warning (the
     *    caller then writes the marker);
@@ -131,12 +132,22 @@ object Streams {
                          append: DataFrame => Unit,
                          appendToIndex: Boolean, selfHeal: Boolean)
                         (emit: DataFrame => Unit): Unit = {
-    val nBatch = b.select(idCol).distinct().count()
-    // batch side broadcast: the index side is a single-column scan
-    val bIds = broadcast(b.select(col(idCol).as("id")))
-    val present = indexIds.map { case (t, ids) =>
-      t -> ids.toDF("id").join(bIds, Seq("id"), "left_semi").distinct().count()
+    // One aggregate: the batch's ids (tag -1) and each table's hits (tag
+    // i: its ids semi-joined against the broadcast batch ids; the index
+    // side is a single-column scan) grouped by id. Every group holds a
+    // batch id, so count(1) is the distinct batch-id count (a null id is
+    // one group, as distinct counts it) and count(in_i) the batch ids
+    // table i holds (a null id matches nothing).
+    val ids = b.select(col(idCol).as("id"))
+    val tagged = indexIds.indices.foldLeft(ids.withColumn("t", lit(-1))) { (acc, i) =>
+      acc.unionByName(indexIds(i)._2.toDF("id")
+        .join(broadcast(ids), Seq("id"), "left_semi").withColumn("t", lit(i)))
     }
+    val in = indexIds.indices.map(i => max(when(col("t") === i, 1)).as(s"in_$i"))
+    val counts = tagged.groupBy("id").agg(in.head, in.tail: _*)
+      .agg(count(lit(1)), indexIds.indices.map(i => count(col(s"in_$i"))): _*).head()
+    val nBatch = counts.getLong(0)
+    val present = indexIds.indices.map(i => indexIds(i)._1 -> counts.getLong(i + 1))
     if (appendToIndex && selfHeal && present.forall(_._2 == nBatch))
       warnSelfHeal(op, marker, nBatch)
     else {
@@ -218,7 +229,8 @@ object Streams {
     * (doc_id, plus the original columns joined back).
     *
     * With `appendToIndex=true` the survivors' bands/shingles are appended
-    * to the index after emission, so later micro-batches near-dedup
+    * to the index after emission, taken from the probe's own views
+    * ([[graft.dedup.Dedup.appendLshIndex]]), so later micro-batches near-dedup
     * against everything accepted so far — the steady-state corpus-ingest
     * loop (probe → accept → index-append) with NO streaming engine state
     * at all: the index on durable storage IS the state, exactly as it
@@ -265,12 +277,15 @@ object Streams {
     val spark = docs.sparkSession
     markedBatches(docs, indexDir, checkpointLocation) { (b, marker) =>
       val (bandE, shE) = graft.dedup.Dedup.readLshIndex(spark, indexDir)
+      // Lazy: probed only once the batch is adjudicated unindexed; the
+      // append then writes the survivors' rows from the probe's views.
+      lazy val probe = graft.dedup.Dedup.lshProbe(
+        b, bandE, shE, "doc_id", "text", threshold,
+        guardDisjoint = false) // adjudicated against the same table
       indexGated(b, "nearDupIngest", "doc_id", marker,
         Seq("shingles" -> shE.select("id")),
-        graft.dedup.Dedup.lshNewDocsAgainstIndex(
-          b, bandE, shE, "doc_id", "text", threshold,
-          guardDisjoint = false), // adjudicated against the same table
-        graft.dedup.Dedup.appendLshIndex(_, "doc_id", "text", indexDir),
+        probe.survivorIds,
+        graft.dedup.Dedup.appendLshIndex(probe, _, "doc_id", indexDir),
         appendToIndex, selfHeal)(emit)
     } { batchId =>
       if (appendToIndex && compactEvery > 0 && (batchId + 1) % compactEvery == 0)

@@ -16,8 +16,9 @@ import org.apache.spark.storage.StorageLevel
   * concurrent duplication.
   *
   * [[materialize]] persists and then forces the computation with one
-  * cheap `count()` action, so every later consumer — both sides of a
-  * self-join included — reads the cache. This is the standard
+  * job over the cached scan (`GraftColumnBridge.cachedRowCount`: no
+  * aggregate, no exchange on top), so every later consumer — both sides
+  * of a self-join included — reads the cache. This is the standard
   * materialize-the-exploded-view step of a shingle join at cluster
   * scale: one pass writes the view, N stages read it.
   *
@@ -44,8 +45,7 @@ object Views {
   def materializeCounted(df: DataFrame): (DataFrame, Long) = {
     val p = df.persist(StorageLevel.MEMORY_AND_DISK)
     live.add(p)
-    val n = p.count()
-    (p, n)
+    (p, org.apache.spark.sql.GraftColumnBridge.cachedRowCount(p))
   }
 
   /** [[materialize]], returning a LINEAGE-TRUNCATED view of the cache
@@ -63,7 +63,7 @@ object Views {
   def materializeTruncated(df: DataFrame): DataFrame = {
     val p = df.persist(StorageLevel.MEMORY_AND_DISK)
     live.add(p)
-    p.count()
+    org.apache.spark.sql.GraftColumnBridge.cachedRowCount(p)
     org.apache.spark.sql.GraftColumnBridge.lineageTruncated(p)
   }
 
@@ -77,9 +77,16 @@ object Views {
     * end-of-query storage reclaim. Blocking=false: the blocks drop
     * asynchronously; correctness never depends on them (each view's
     * lineage still exists — a post-reclaim consumer would recompute,
-    * not fail). */
-  def unpersistAll(): Unit = {
-    val it = live.iterator()
-    while (it.hasNext) { it.next().unpersist(blocking = false); it.remove() }
+    * not fail).
+    *
+    * Newest first: a view is dropped only after every view built on it,
+    * so no uncache finds a still-cached dependent to re-check (Spark
+    * tests each dependent's buffers and may re-plan it). The walk holds
+    * the list's lock, so a [[materialize]] on another thread (a stream's
+    * own) waits instead of breaking the walk. */
+  def unpersistAll(): Unit = live.synchronized {
+    var i = live.size - 1
+    while (i >= 0) { live.get(i).unpersist(blocking = false); i -= 1 }
+    live.clear()
   }
 }

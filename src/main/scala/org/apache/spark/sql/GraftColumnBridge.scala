@@ -18,6 +18,17 @@ object GraftColumnBridge {
              plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
+  /** Row count of `df` from one job over its plan as the cache manager
+    * rewrites it NOW: a fresh `QueryExecution`, so a frame persisted
+    * since its own plan was built reads (and, the first time, fills) its
+    * `InMemoryRelation`. `Dataset.count()` would put an aggregate and a
+    * single-partition exchange on top: a map job, then a result job
+    * after adaptive execution re-plans the rest. */
+  def cachedRowCount(df: DataFrame): Long = {
+    val ds = df.asInstanceOf[classic.Dataset[_]]
+    ds.sparkSession.sessionState.executePlan(ds.logicalPlan).toRdd.count()
+  }
+
   /** Lineage-truncated view of `df`: a DataFrame whose plan is a flat
     * scan of `df`'s physical RDD. For iterative algorithms this stops
     * Catalyst re-analyzing a per-round-deepening plan, while — unlike

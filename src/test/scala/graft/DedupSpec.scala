@@ -322,6 +322,33 @@ class DedupSpec extends SparkSpec {
     assert(e.getMessage.contains("disjoint"))
   }
 
+  test("stored-index probe equals lshNewDocs with a shingle-less doc and an in-batch near-dup pair") {
+    val base = "a b c d e f g h i j k l m n"
+    val existing = Seq(
+      (10L, s"alpha beta gamma delta $base"),
+      (11L, "one two three four five six seven eight nine ten eleven twelve")
+    ).toDF("doc_id", "text")
+    val batch = Seq(
+      (1L, "hi there"), // no word trigram: no shingles, no bands
+      (2L, "red green blue yellow purple orange black white pink brown grey cyan teal navy"),
+      (3L, "red green blue yellow purple orange black white pink brown grey cyan teal gold"),
+      (4L, s"alpha beta gamma delta ${base.dropRight(1)}z"),
+      (5L, "completely new words for this particular test document only here")
+    ).toDF("doc_id", "text")
+    val inQuery = Dedup.lshNewDocs(batch, existing, "doc_id", "text", 0.6)
+      .collect().map(_.getLong(0)).toSet
+    val dir = java.nio.file.Files.createTempDirectory("graft_lsh_probe").toString
+    Dedup.writeLshIndex(existing, "doc_id", "text", dir)
+    val (bandE, shE) = Dedup.readLshIndex(spark, dir)
+    val stored = Dedup.lshNewDocsAgainstIndex(batch, bandE, shE, "doc_id", "text", 0.6)
+      .collect().map(_.getLong(0)).toSet
+    // 3 near-dups the earlier batch doc 2, 4 near-dups indexed doc 10;
+    // the shingle-less doc 1 survives.
+    assert(inQuery === Set(1L, 2L, 5L))
+    assert(stored === inQuery)
+    graft.util.Views.unpersistAll()
+  }
+
   test("bucketed stored index: same survivors, exchange-free id aggregate, write-once, restart re-registration") {
     val corpus = Dedup.augmented(Sources.documents(spark, sfDir))
     val isBatch = col("doc_id") % 10 === 0

@@ -53,7 +53,8 @@ class StreamBatchSpec extends SparkSpec {
     1L -> "alpha beta gamma delta epsilon zeta",
     2L -> "one two three four five six seven",
     99L -> "totally fresh words never indexed here",
-    100L -> "another unseen sentence with its own tokens")
+    100L -> "another unseen sentence with its own tokens",
+    101L -> "alpha beta gamma delta epsilon zeta")
 
   private def docStream(): (MemoryStream[StreamDoc], Seq[Long] => Unit) = {
     implicit val sqlCtx = spark.sqlContext
@@ -219,6 +220,33 @@ class StreamBatchSpec extends SparkSpec {
         assert(fs.exists(new Path(s"$root/_batches/$lineage-1")))
       } finally in.cleanup()
     }
+  }
+
+  /** The job ceiling of one `nearDupIngest` micro-batch with appends on:
+    * one adjudication aggregate, the probe's forced views, the survivors,
+    * the append of `bands` then `shingles` from the probe's views, and
+    * the batch read itself. A re-derivation of the batch's shingles or
+    * bands, or a second forcing action per view, pushes it over. */
+  test("nearDupIngest runs one micro-batch within its job budget") {
+    val dir = tmp("graft_sb_jobs")
+    dedup.Dedup.writeLshIndex(existingDocs, "doc_id", "text", dir)
+    val (s, feed) = docStream()
+    var survivors = Set.empty[Long]
+    val q = Streams.nearDupIngest(s.toDF(), dir, 0.6, appendToIndex = true) { surv =>
+      survivors = surv.select("doc_id").collect().map(_.getLong(0)).toSet
+    }
+    val (_, jobs) = try new JobProbe(spark).jobsDuring {
+      feed(Seq(99L, 100L, 101L)); q.processAllAvailable()
+    } finally q.stop()
+    // 101 repeats doc 1's text: rejected; the two fresh docs survive and
+    // are appended.
+    assert(survivors === Set(99L, 100L))
+    val n = jobs.count(_.getProperty(
+      org.apache.spark.sql.execution.streaming.runtime.StreamExecution.QUERY_ID_KEY) ==
+      q.id.toString)
+    assert(n > 0, "no job carried the stream's query id")
+    info(s"$n jobs in the micro-batch")
+    assert(n <= 38)
   }
 
   private val DayNs = 86400000000000L

@@ -273,10 +273,23 @@ class StreamingSpec extends SparkSpec {
       "doc_id", "text", 0.6).collect().map(_.getLong(0)).toSet
     assert(perBatch(0) === s1)
     assert(perBatch(1) === s2)
-    // The accepted docs' artifacts really landed in the index.
-    val (bandE, _) = dedup.Dedup.readLshIndex(spark, dir)
+    // The accepted docs' artifacts really landed in the index: both
+    // tables hold, as bags of rows, what one writeLshIndex of the corpus
+    // plus the accepted docs writes.
+    val (bandE, shE) = dedup.Dedup.readLshIndex(spark, dir)
     val indexed = bandE.select("id").distinct().collect().map(_.getLong(0)).toSet
     assert((s1 ++ s2).subsetOf(indexed))
+    val refDir = java.nio.file.Files.createTempDirectory("graft_stream_lsh_ref").toString
+    dedup.Dedup.writeLshIndex(existing.select("doc_id", "text").unionByName(
+      mb1Df.unionByName(mb2Df).filter(col("doc_id").isin((s1 ++ s2).toSeq: _*))),
+      "doc_id", "text", refDir)
+    val (refBands, refShingles) = dedup.Dedup.readLshIndex(spark, refDir)
+    Seq("bands" -> (bandE, refBands), "shingles" -> (shE, refShingles)).foreach {
+      case (t, (got, want)) =>
+        assert(got.count() === want.count(), t)
+        assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty, t)
+    }
+    graft.util.Views.unpersistAll()
     // Replay markers: one per processed micro-batch (round 11 — the
     // annIngest protocol, previously missing from this ingest).
     assert(new java.io.File(s"$dir/_batches").listFiles()
