@@ -35,9 +35,9 @@ object RebucketBench {
     dedup.Dedup.writeLshIndexBucketed(docs.filter(!isBatch),
       "doc_id", "text", base)
     (0 until chunks).foreach { i =>
-      dedup.Dedup.appendLshIndexBucketed(
-        docs.filter(isBatch && col("doc_id") % chunks === i),
-        base, "doc_id", "text")
+      dedup.Dedup.appendLshIndexBucketed(dedup.Dedup.lshViews(
+        docs.filter(isBatch && col("doc_id") % chunks === i), "doc_id", "text"),
+        base)
       graft.util.Views.unpersistAll()
     }
     Seq("shingles", "bands", "dict", "shids").foreach(p =>

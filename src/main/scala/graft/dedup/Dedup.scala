@@ -3,11 +3,23 @@ package graft.dedup
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** One incremental LSH probe ([[Dedup.lshProbe]]): the batch's
-  * surviving ids (`doc_id`, lazy) and the batch's materialized
-  * (id, sh) shingle and (id, band_idx, band_key) band views it judged
-  * them from. */
-final case class LshProbe(survivorIds: DataFrame, shingles: DataFrame, bands: DataFrame)
+/** LSH index rows for a set of documents ([[Dedup.lshViews]]): the
+  * (id, sh) shingle view and the (id, band_idx, band_key) band view
+  * derived from it. */
+final case class LshViews(shingles: DataFrame, bands: DataFrame) {
+  /** The rows of the ids listed in `ids` (a one-column frame), kept by a
+    * broadcast `left_semi` on both views. */
+  def of(ids: DataFrame): LshViews = {
+    val keep = broadcast(ids.toDF("id"))
+    LshViews(shingles.join(keep, Seq("id"), "left_semi"),
+      bands.join(keep, Seq("id"), "left_semi"))
+  }
+}
+
+/** One incremental LSH probe ([[Dedup.lshProbe]],
+  * [[Dedup.lshProbeEncoded]]): the batch's surviving ids (`doc_id`,
+  * lazy) and the batch's materialized views it judged them from. */
+final case class LshProbe(survivorIds: DataFrame, batch: LshViews)
 
 /** Document deduplication for large-scale training-data pipelines — the
   * north-star extension surface beyond the reference's own operators
@@ -152,6 +164,7 @@ object Dedup {
   private def capByDocFreq(sh0: DataFrame, maxDocFreq: Option[Long]): DataFrame =
     maxDocFreq match {
       case Some(cap) =>
+        // (id, sh) rows are distinct per doc, so doc frequency = row count.
         val keep = sh0.groupBy("sh").agg(count(lit(1)).as("df"))
           .filter(col("df") <= cap).select("sh")
         sh0.join(keep, "sh")
@@ -168,18 +181,65 @@ object Dedup {
     * dropped them identically. */
   private def jaccardForPairs(pairs: DataFrame, sh: DataFrame,
                               threshold: Double): DataFrame = {
-    val counts = sh.groupBy("id").agg(count(lit(1)).as("n_sh"))
-    val common = pairs
-      .join(sh.select(col("id").as("id_a"), col("sh")), "id_a")
-      .join(sh.select(col("id").as("id_b"), col("sh")), Seq("id_b", "sh"))
-      .groupBy("id_a", "id_b").agg(count(lit(1)).as("n_common"))
-    common
-      .join(counts.withColumnRenamed("id", "id_a").withColumnRenamed("n_sh", "n_a"), "id_a")
-      .join(counts.withColumnRenamed("id", "id_b").withColumnRenamed("n_sh", "n_b"), "id_b")
-      .withColumn("jaccard", col("n_common") / (col("n_a") + col("n_b") - col("n_common")))
-      .filter(col("jaccard") >= threshold)
+    val sizes = setSizes(sh)
+    jaccardAtLeast(commonPerPair(pairs, sh, sh, "sh"), sizes, sizes, threshold)
       .select("id_a", "id_b", "jaccard")
   }
+
+  // ------------------------------------------------ verification kernel
+  // Every Jaccard verdict in this object (in-query, stored and probe
+  // tiers, string or dictionary keys) is built from these helpers.
+
+  /** (id_a, id_b) pairs of rows of band views `a` and `b` sharing a
+    * (band_idx, band_key). `ids` further restricts a pair through the
+    * aliases `a.id` and `b.id`. A pair repeats once per shared band. */
+  private def bandPairs(a: DataFrame, b: DataFrame,
+                        ids: Column = lit(true)): DataFrame =
+    a.as("a").join(b.as("b"), col("a.band_idx") === col("b.band_idx") &&
+        col("a.band_key") === col("b.band_key") && ids)
+      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
+
+  /** |A∩B| per listed pair, as (id_a, id_b, n_common): `pairs` joined to
+    * side A's and side B's (id, `key`) rows, so join rows exist only for
+    * listed pairs. A repeated pair counts its intersection again, so
+    * `pairs` must be distinct. */
+  private def commonPerPair(pairs: DataFrame, a: DataFrame, b: DataFrame,
+                            key: String): DataFrame =
+    pairs
+      .join(a.select(col("id").as("id_a"), col(key)), "id_a")
+      .join(b.select(col("id").as("id_b"), col(key)), Seq("id_b", key))
+      .groupBy("id_a", "id_b").agg(count(lit(1)).as("n_common"))
+
+  /** Per-doc set sizes (id, n_sh) of an (id, key) view whose rows are
+    * distinct per doc. */
+  private def setSizes(sh: DataFrame): DataFrame =
+    sh.groupBy("id").agg(count(lit(1)).as("n_sh"))
+
+  /** `common` (id_a, id_b, n_common) with each side's set size, taken
+    * from (id, n_sh) tables, as n_a and n_b. */
+  private def withSizes(common: DataFrame, sizesA: DataFrame,
+                        sizesB: DataFrame): DataFrame =
+    common
+      .join(sizesA.select(col("id").as("id_a"), col("n_sh").as("n_a")), "id_a")
+      .join(sizesB.select(col("id").as("id_b"), col("n_sh").as("n_b")), "id_b")
+
+  /** The pairs of `common` whose Jaccard |A∩B| / |A∪B| reaches
+    * `threshold`, with the ratio as `jaccard`. */
+  private def jaccardAtLeast(common: DataFrame, sizesA: DataFrame,
+                             sizesB: DataFrame, threshold: Double): DataFrame =
+    withSizes(common, sizesA, sizesB)
+      .withColumn("jaccard", col("n_common") / (col("n_a") + col("n_b") - col("n_common")))
+      .filter(col("jaccard") >= threshold)
+
+  /** Fails unless `batchIds` and `indexedIds` (one `id` column each)
+    * share no id. The verification keys a document's shingles by id
+    * alone, so an id on both sides would count its shingles twice and
+    * corrupt the verdict. The batch ids are broadcast; the indexed side
+    * is a single-column scan. */
+  private def requireDisjoint(op: String, indexedIds: DataFrame,
+                              batchIds: DataFrame): Unit =
+    require(indexedIds.join(broadcast(batchIds), Seq("id"), "left_semi").isEmpty,
+      s"$op: batch ids collide with the indexed ids — the id spaces must be disjoint")
 
   /** Distinct doc ids occurring in a candidate pair set. */
   private def candidateIds(cand: DataFrame): DataFrame =
@@ -187,27 +247,19 @@ object Dedup {
       .union(cand.select(col("id_b").as("id"))).distinct()
 
   /** Pair statistics from an (id, sh) shingle view the caller has already
-    * restricted/persisted: (id_a, id_b, n_common, n_a, n_b) for every pair
-    * sharing at least one surviving shingle. The shared core of both
-    * set-similarity metrics ([[jaccardPairs]], [[overlapPairs]]). */
+    * restricted/persisted: (id_a, id_b, n_common) for every pair sharing
+    * at least one surviving shingle, and the (id, n_sh) set sizes. The
+    * shared core of both set-similarity metrics ([[jaccardPairs]],
+    * [[overlapPairs]]). */
   private def pairStats(sh0: DataFrame,
-                        maxDocFreq: Option[Long] = None): DataFrame = {
-    // (id, sh) rows are distinct per doc, so doc frequency = row count.
-    val sh = maxDocFreq match {
-      case Some(cap) =>
-        val keep = sh0.groupBy("sh").agg(count(lit(1)).as("df"))
-          .filter(col("df") <= cap).select("sh")
-        graft.util.Views.materializeTruncated(sh0.join(keep, "sh"))
-      case None => sh0
-    }
-    val counts = sh.groupBy("id").agg(count(lit(1)).as("n_sh"))
+                        maxDocFreq: Option[Long]): (DataFrame, DataFrame) = {
+    val sh = if (maxDocFreq.isEmpty) sh0
+      else graft.util.Views.materializeTruncated(capByDocFreq(sh0, maxDocFreq))
     val common = sh.as("a")
       .join(sh.as("b"), col("a.sh") === col("b.sh") && col("a.id") < col("b.id"))
       .groupBy(col("a.id").as("id_a"), col("b.id").as("id_b"))
       .agg(count(lit(1)).as("n_common"))
-    common
-      .join(counts.withColumnRenamed("id", "id_a").withColumnRenamed("n_sh", "n_a"), "id_a")
-      .join(counts.withColumnRenamed("id", "id_b").withColumnRenamed("n_sh", "n_b"), "id_b")
+    (common, setSizes(sh))
   }
 
   /** ONE materialized clustered shingle view for callers that feed
@@ -222,11 +274,10 @@ object Dedup {
   /** Jaccard pairs from an (id, sh) shingle view the caller has already
     * restricted/persisted. */
   private[graft] def jaccardFromShingles(sh0: DataFrame, threshold: Double,
-                                  maxDocFreq: Option[Long] = None): DataFrame =
-    pairStats(sh0, maxDocFreq)
-      .withColumn("jaccard", col("n_common") / (col("n_a") + col("n_b") - col("n_common")))
-      .filter(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "jaccard")
+                                  maxDocFreq: Option[Long] = None): DataFrame = {
+    val (common, sizes) = pairStats(sh0, maxDocFreq)
+    jaccardAtLeast(common, sizes, sizes, threshold).select("id_a", "id_b", "jaccard")
+  }
 
   /** All pairs with shingle OVERLAP COEFFICIENT ≥ `threshold`:
     * |A∩B| / min(|A|, |B|). The subset-duplication detector Jaccard
@@ -238,11 +289,14 @@ object Dedup {
     * mandatory skew guard at corpus scale. */
   def overlapPairs(docs: DataFrame, idCol: String, textCol: String,
                    threshold: Double,
-                   maxDocFreq: Option[Long] = None): DataFrame =
-    pairStats(shingleRowsClustered(docs, idCol, textCol), maxDocFreq)
+                   maxDocFreq: Option[Long] = None): DataFrame = {
+    val (common, sizes) =
+      pairStats(shingleRowsClustered(docs, idCol, textCol), maxDocFreq)
+    withSizes(common, sizes, sizes)
       .withColumn("overlap", col("n_common") / least(col("n_a"), col("n_b")))
       .filter(col("overlap") >= threshold)
       .select("id_a", "id_b", "overlap")
+  }
 
   /** MinHash signature: element j = min over shingles of md5(j ':' sh).
     * Lexicographic min over fixed-width hex = uniform min-hash; identical
@@ -254,39 +308,34 @@ object Dedup {
   }
 
   /** Per-doc minhash SIGNATURES as a [[NumHashes]]-element array, via the
-    * FLAT codegen path (round 13): explode shingles (id-clustered), one
-    * native [[graft.functions.MinhashRow]] call per shingle row, then a
-    * partial+final min-per-component aggregate — the
-    * [[bandRowsFromShingles]] signature stage without the banding.
-    * Bit-identical to [[minhashSignature]]'s higher-order array form
-    * (lexicographic min over the same md5 strings) but codegen
-    * end-to-end, parallel across the clustered shingle partitions, and
-    * map-side-combining where the array form is interpreted per row
-    * inside the scan task. Docs with no shingles emit no row (the array
-    * form yields an all-NULL signature for them — callers here join
-    * signatures through candidate pairs, which shingle-less docs cannot
-    * enter, so the surfaces agree). */
-  private[graft] def minhashSignatures(docs: DataFrame, idCol: String,
-                        textCol: String,
-                        numHashes: Int = NumHashes): DataFrame =
-    minhashSignaturesFromShingles(
-      shingleRowsClustered(docs, idCol, textCol), numHashes)
-
-  /** [[minhashSignatures]] over an (id, sh) shingle view the caller has
-    * already derived/materialized (round 14 — the shared-shingle-view
-    * discipline dedup_lsh_recall got in round 13, for callers that also
-    * need candidates or verification from the same corpus pass). */
+    * FLAT codegen path (round 13) over an (id, sh) shingle view the caller
+    * has already derived/materialized: the [[minhashMins]] aggregate
+    * behind [[bandRowsFromShingles]], without the banding. Bit-identical
+    * to [[minhashSignature]]'s higher-order array form (lexicographic min
+    * over the same md5 strings) but codegen end-to-end, parallel across
+    * the clustered shingle partitions, and map-side-combining where the
+    * array form is interpreted per row inside the scan task. Docs with no
+    * shingles emit no row (the array form yields an all-NULL signature
+    * for them — callers here join signatures through candidate pairs,
+    * which shingle-less docs cannot enter, so the surfaces agree). */
   private[graft] def minhashSignaturesFromShingles(sh: DataFrame,
-                        numHashes: Int = NumHashes): DataFrame = {
+                        numHashes: Int = NumHashes): DataFrame =
+    minhashMins(sh, numHashes).select(col("id"),
+      array((0 until numHashes).map(j => col(s"h$j")): _*).as("sig"))
+
+  /** Per-doc minhash components (id, h0 … h{numHashes-1}) of an (id, sh)
+    * view: one native [[graft.functions.MinhashRow]] call per shingle row
+    * computes the whole hash family (reused digest, byte-level prefixes),
+    * then a partial+final aggregate takes each component's min over cheap
+    * array reads instead of that many md5(concat) chains per row. */
+  private def minhashMins(sh: DataFrame, numHashes: Int): DataFrame = {
     val hs = org.apache.spark.sql.GraftColumnBridge.column(
       graft.functions.MinhashRow(
         org.apache.spark.sql.GraftColumnBridge.expression(col("sh")), numHashes))
     sh.select(col("id"), hs.as("hs")).groupBy("id").agg(
-        min(element_at(col("hs"), 1)).as("h0"),
-        (1 until numHashes).map(j =>
-          min(element_at(col("hs"), j + 1)).as(s"h$j")): _*)
-      .select(col("id"),
-        array((0 until numHashes).map(j => col(s"h$j")): _*).as("sig"))
+      min(element_at(col("hs"), 1)).as("h0"),
+      (1 until numHashes).map(j =>
+        min(element_at(col("hs"), j + 1)).as(s"h$j")): _*)
   }
 
   /** Candidate-restricted exact Jaccard from an (id, sh) shingle view
@@ -321,23 +370,14 @@ object Dedup {
 
   /** (id, band_idx, band_key) band rows from an (id, sh) shingle view —
     * the LSH band INDEX, materialized (at cluster scale this is computed
-    * once and stored; incremental ingest probes it). One native
-    * MinhashRow call per shingle row computes the whole hash family
-    * (reused digest, byte-level prefixes); the aggregate then takes
-    * [[NumHashes]] mins over cheap array reads instead of that many
-    * md5(concat) chains per row. */
+    * once and stored; incremental ingest probes it), keyed by md5 of each
+    * band's [[minhashMins]] components. */
   private def bandRowsFromShingles(sh: DataFrame,
                                    numHashes: Int = NumHashes,
                                    numBands: Int = NumBands): DataFrame = {
     require(numHashes % numBands == 0, "numBands must divide numHashes")
     val rows = numHashes / numBands
-    val hs = org.apache.spark.sql.GraftColumnBridge.column(
-      graft.functions.MinhashRow(
-        org.apache.spark.sql.GraftColumnBridge.expression(col("sh")), numHashes))
-    val sig = sh.select(col("id"), hs.as("hs")).groupBy("id").agg(
-      min(element_at(col("hs"), 1)).as("h0"),
-      (1 until numHashes).map(j =>
-        min(element_at(col("hs"), j + 1)).as(s"h$j")): _*)
+    val sig = minhashMins(sh, numHashes)
     val bandKeyCols = (0 until numBands).map { b =>
       md5(concat_ws("|", (b * rows until (b + 1) * rows).map(r => col(s"h$r")): _*))
     }
@@ -381,12 +421,7 @@ object Dedup {
         .select("band_idx", "band_key")
       withBands0.join(ok, Seq("band_idx", "band_key"), "left_semi")
     }
-    withBands.as("a")
-      .join(withBands.as("b"),
-        col("a.band_idx") === col("b.band_idx") &&
-          col("a.band_key") === col("b.band_key") && col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .distinct()
+    bandPairs(withBands, withBands, col("a.id") < col("b.id")).distinct()
   }
 
   /** INCREMENTAL near-dedup — the LSH twin of the exact-hash ingest path:
@@ -401,24 +436,24 @@ object Dedup {
     * only. Batch docs with no shingles trivially survive. */
   def lshNewDocs(batch: DataFrame, existing: DataFrame, idCol: String,
                  textCol: String, threshold: Double): DataFrame = {
-    // PRECONDITION (enforced): batch and existing id spaces are DISJOINT.
-    // shPartner in the probe unions both sides keyed only by id, so a doc
-    // id present on both sides would double-count its shingles in n_b and
-    // corrupt the Jaccard verdict. One id-projected semi-join probe up
-    // front (batch ids broadcast; the corpus side is a single-column
-    // scan — negligible next to the shingle joins that follow) fails
-    // loudly instead of silently mis-verifying.
-    require(existing.select(col(idCol))
-        .join(broadcast(batch.select(col(idCol))), Seq(idCol), "left_semi")
-        .isEmpty,
-      "lshNewDocs: batch and existing share doc ids — the id spaces must be disjoint")
-    // Materialized: feeds BOTH the index banding and the partner-shingle
-    // verification side — without it the normalize→shingle derivation of
-    // the (large) existing corpus runs twice.
-    val shE = graft.util.Views.materializeTruncated(
-      shingleRowsClustered(existing, idCol, textCol))
-    lshNewDocsAgainstIndex(batch, bandRowsFromShingles(shE), shE,
+    // Guarded on the full frames, before any shingling.
+    requireDisjoint("lshNewDocs", existing.select(col(idCol).as("id")),
+      batch.select(col(idCol).as("id")))
+    val index = lshViews(existing, idCol, textCol)
+    lshNewDocsAgainstIndex(batch, index.bands, index.shingles,
       idCol, textCol, threshold, guardDisjoint = false)
+  }
+
+  /** The LSH index rows of `docs`: the id-clustered (id, sh) shingle view
+    * ([[shingleView]]), materialized once, and the band view built from
+    * it. Every index build, probe and append takes its rows from here, so
+    * no document is shingled or minhashed twice. Clustering the docs by
+    * id before shingling keeps the signature aggregate and every id-keyed
+    * probe stage free of shingle-row shuffles (sf10 measured an
+    * un-clustered probe shipping 863 MB, mostly in that stage). */
+  def lshViews(docs: DataFrame, idCol: String, textCol: String): LshViews = {
+    val sh = shingleView(docs, idCol, textCol)
+    LshViews(sh, bandRowsFromShingles(sh))
   }
 
   /** The probe half of [[lshNewDocs]], against a PREBUILT existing-side
@@ -435,80 +470,53 @@ object Dedup {
                              guardDisjoint: Boolean = true): DataFrame =
     lshProbe(batch, bandE, shE, idCol, textCol, threshold, guardDisjoint).survivorIds
 
-  /** [[lshNewDocsAgainstIndex]], also handing back the batch's
-    * materialized (id, sh) shingle and (id, band_idx, band_key) band
-    * views, so an ingest appends its survivors to the index from them
-    * ([[appendLshIndex]]) instead of shingling and minhashing the same
-    * documents again. */
+  /** [[lshNewDocsAgainstIndex]], also handing back the batch's views, so
+    * an ingest appends its survivors to the index from them
+    * (`appendLshIndex(probe.batch.of(ids), dir)`). */
   def lshProbe(batch: DataFrame, bandE: DataFrame, shE: DataFrame,
                idCol: String, textCol: String, threshold: Double,
                guardDisjoint: Boolean = true): LshProbe = {
     if (guardDisjoint)
-      require(shE.select("id")
-          .join(broadcast(batch.select(col(idCol).as("id"))), Seq("id"), "left_semi")
-          .isEmpty,
-        "lshNewDocsAgainstIndex: batch ids collide with the stored index — " +
-          "the id spaces must be disjoint")
-    // Cluster the BATCH by doc id before shingling — the writeLshIndex
-    // discipline applied to the probe side (round 10, VERDICT r9 task
-    // #6): the explode preserves the hash partitioning, so the batch's
-    // signature aggregate and every id-keyed probe stage downstream run
-    // without shuffling shingle rows; the one exchange paid here is on
-    // doc rows, ~3× smaller than their shingles (sf10 measured the
-    // un-clustered probe shipping 863 MB — mostly this stage).
-    val shB = graft.util.Views.materializeTruncated(
-      shingleRows(batch.repartition(col(idCol)), idCol, textCol))
-    val bB = bandRowsFromShingles(shB)
+      requireDisjoint("lshNewDocsAgainstIndex", shE.select("id"),
+        batch.select(col(idCol).as("id")))
+    val views = lshViews(batch, idCol, textCol)
     LshProbe(probeVerify(batch.select(col(idCol).as("doc_id")),
-      bB, bandE, shB, shE, threshold), shB, bB)
+      views, bandE, shE, threshold), views)
   }
 
-  /** The candidate-generation + pair-keyed-verification core of the
-    * incremental probe, GENERIC over the shingle key type: `shB` / `shE`
-    * are (id, sh) views of batch and corpus in the SAME key space — raw
-    * trigram strings on the legacy path ([[lshNewDocsAgainstIndex]]),
-    * 8-byte dictionary ids on the encoded path
-    * ([[lshNewDocsAgainstIndexEncoded]]). The verification joins key on
-    * `sh`, so the key's byte width IS the probe's dominant shuffle
-    * width — the whole point of the dictionary. */
-  private def probeVerify(batchIds: DataFrame, bB: DataFrame, bandE: DataFrame,
-                          shB: DataFrame, shE: DataFrame,
-                          threshold: Double): DataFrame = {
-    def bandMatch = col("a.band_idx") === col("b.band_idx") &&
-      col("a.band_key") === col("b.band_key")
-    val candE = bB.as("a").join(bandE.as("b"), bandMatch)
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-    val candB = bB.as("a").join(bB.as("b"), bandMatch && col("b.id") < col("a.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-    val cand = graft.util.Views.materializeTruncated(candE.union(candB).distinct())
+  /** The candidate-generation + pair-keyed-verification core of
+    * [[lshProbe]]: the batch's bands probe the band index `bandE` and
+    * band among themselves (a batch doc is judged against earlier, i.e.
+    * smaller, batch ids), and each candidate pair is verified on raw
+    * shingle strings against the batch view and the (id, sh) store
+    * `shE`. [[lshProbeEncoded]] splits the same verification by partner
+    * side to key corpus partners on dictionary ids. */
+  private def probeVerify(batchIds: DataFrame, batch: LshViews, bandE: DataFrame,
+                          shE: DataFrame, threshold: Double): DataFrame = {
+    val LshViews(shB, bB) = batch
+    val cand = graft.util.Views.materializeTruncated(bandPairs(bB, bandE)
+      .union(bandPairs(bB, bB, col("b.id") < col("a.id"))).distinct())
     // Only the partner side needs restricting: the batch side is
     // batch-sized, and the joins through `cand` below already keep just
     // the probing docs' rows and counts.
     val shPartner = shB.unionByName(shE)
       .join(cand.select(col("id_b").as("id")), Seq("id"), "left_semi")
-    val nA = shB.groupBy("id").agg(count(lit(1)).as("n_a"))
-      .withColumnRenamed("id", "id_a")
-    val nB = shPartner.groupBy("id").agg(count(lit(1)).as("n_b"))
-      .withColumnRenamed("id", "id_b")
-    // Pair-keyed intersection through the candidate list (round 10 —
-    // the jaccardForPairs shape): the probe-side shingle frame joins
-    // candidate pairs first, so the common-shingle join emits rows for
-    // LISTED pairs only — never the Σ_sh occ² of a raw shingle
-    // self-join (a hot shingle shared by many partner docs made the old
-    // shape quadratic at corpus scale).
-    val rejected = cand
-      .join(shB.select(col("id").as("id_a"), col("sh")), "id_a")
-      .join(shPartner.select(col("id").as("id_b"), col("sh")), Seq("id_b", "sh"))
-      .groupBy("id_a", "id_b").agg(count(lit(1)).as("n_common"))
-      .join(nA, "id_a").join(nB, "id_b")
-      .filter(col("n_common") / (col("n_a") + col("n_b") - col("n_common")) >= threshold)
+    val rejected = jaccardAtLeast(commonPerPair(cand, shB, shPartner, "sh"),
+        setSizes(shB), setSizes(shPartner), threshold)
       .select(col("id_a").as("doc_id"))
     batchIds.join(rejected, Seq("doc_id"), "left_anti")
   }
 
+  /** [[lshProbeEncoded]]'s surviving batch ids. */
+  def lshNewDocsAgainstIndexEncoded(batch: DataFrame, base: String,
+                                    idCol: String, textCol: String,
+                                    threshold: Double,
+                                    guardDisjoint: Boolean = true): DataFrame =
+    lshProbeEncoded(batch, base, idCol, textCol, threshold, guardDisjoint).survivorIds
+
   /** The DICTIONARY-ENCODED incremental probe against a
     * [[writeLshIndexBucketed]] index (round 11, VERDICT r10 task #1):
-    * identical verdicts to [[lshNewDocsAgainstIndex]], but verification
+    * identical verdicts to [[lshProbe]], but verification
     * against CORPUS partners joins on the stored 8-byte `sid` instead
     * of the raw trigram text (~25 bytes average) -- the strings riding
     * the (id_b, sh) join were the single largest measured byte-mover at
@@ -540,39 +548,27 @@ object Dedup {
     * corpus (not the fixture's 10%): the encode shuffle scales with
     * |batch| while the partner-side string savings scale with
     * |candidate partners| * shingles/doc, which dominates. */
-  def lshNewDocsAgainstIndexEncoded(batch: DataFrame, base: String,
-                                    idCol: String, textCol: String,
-                                    threshold: Double,
-                                    guardDisjoint: Boolean = true): DataFrame = {
+  def lshProbeEncoded(batch: DataFrame, base: String,
+                      idCol: String, textCol: String,
+                      threshold: Double,
+                      guardDisjoint: Boolean = true): LshProbe = {
     val spark = batch.sparkSession
     val (bandE, _) = readLshIndexBucketed(spark, base)
     val dict = spark.table(s"${base}_dict")
     val shE = spark.table(s"${base}_shids")
-    if (guardDisjoint) require(shE.select("id")
-        .join(broadcast(batch.select(col(idCol).as("id"))), Seq("id"), "left_semi")
-        .isEmpty,
-      "lshNewDocsAgainstIndexEncoded: batch ids collide with the stored " +
-        "index -- the id spaces must be disjoint")
-    val shB = graft.util.Views.materializeTruncated(
-      shingleRows(batch.repartition(col(idCol)), idCol, textCol))
-    val bB = bandRowsFromShingles(shB)
-    def bandMatch = col("a.band_idx") === col("b.band_idx") &&
-      col("a.band_key") === col("b.band_key")
+    if (guardDisjoint)
+      requireDisjoint("lshNewDocsAgainstIndexEncoded", shE.select("id"),
+        batch.select(col(idCol).as("id")))
+    val views = lshViews(batch, idCol, textCol)
+    val LshViews(shB, bB) = views
     // Corpus-partner and batch-partner candidates stay SEPARATE frames --
     // each feeds its own verification key space (id spaces are disjoint
     // by the guard, so the final union never conflates them).
-    val candE = graft.util.Views.materializeTruncated(
-      bB.as("a").join(bandE.as("b"), bandMatch)
-        .select(col("a.id").as("id_a"), col("b.id").as("id_b")).distinct())
+    val candE = graft.util.Views.materializeTruncated(bandPairs(bB, bandE).distinct())
     val candB = graft.util.Views.materializeTruncated(
-      bB.as("a").join(bB.as("b"), bandMatch && col("b.id") < col("a.id"))
-        .select(col("a.id").as("id_a"), col("b.id").as("id_b")).distinct())
+      bandPairs(bB, bB, col("b.id") < col("a.id")).distinct())
     // Per-doc set sizes: plain row counts -- no shingle-keyed join.
-    val nBatch = graft.util.Views.materializeTruncated(
-      shB.groupBy("id").agg(count(lit(1)).as("n_sh")))
-    val nCorpus = shE
-      .join(candE.select(col("id_b").as("id")).distinct(), "id")
-      .groupBy("id").agg(count(lit(1)).as("n_sh"))
+    val nBatch = graft.util.Views.materializeTruncated(setSizes(shB))
     // Batch-vs-corpus intersection THROUGH the candidate list, on sids:
     // restrict batch shingles to probing docs, encode via the bucketed
     // dict (dict side exchange-free), intersect against the stored sid
@@ -581,24 +577,14 @@ object Dedup {
       .join(candE.select(col("id_a").as("id")).distinct(), "id")
       .join(dict, "sh").select(col("id"), col("sid"))
     val shEpart = shE.join(candE.select(col("id_b").as("id")).distinct(), "id")
-    val commonE = candE
-      .join(shBhits.select(col("id").as("id_a"), col("sid")), "id_a")
-      .join(shEpart.select(col("id").as("id_b"), col("sid")), Seq("id_b", "sid"))
-      .groupBy("id_a", "id_b").agg(count(lit(1)).as("n_common"))
+    val commonE = commonPerPair(candE, shBhits, shEpart, "sid")
     // Batch-vs-batch intersection on raw strings -- batch-sized.
-    val commonB = candB
-      .join(shB.select(col("id").as("id_a"), col("sh")), "id_a")
-      .join(shB.select(col("id").as("id_b"), col("sh")), Seq("id_b", "sh"))
-      .groupBy("id_a", "id_b").agg(count(lit(1)).as("n_common"))
-    val nA = nBatch.withColumnRenamed("id", "id_a").withColumnRenamed("n_sh", "n_a")
-    val nB = nCorpus.unionByName(nBatch)
-      .withColumnRenamed("id", "id_b").withColumnRenamed("n_sh", "n_b")
-    val rejected = commonE.unionByName(commonB)
-      .join(nA, "id_a").join(nB, "id_b")
-      .filter(col("n_common") / (col("n_a") + col("n_b") - col("n_common")) >= threshold)
+    val commonB = commonPerPair(candB, shB, shB, "sh")
+    val rejected = jaccardAtLeast(commonE.unionByName(commonB),
+        nBatch, setSizes(shEpart).unionByName(nBatch), threshold)
       .select(col("id_a").as("doc_id")).distinct()
-    batch.select(col(idCol).as("doc_id"))
-      .join(rejected, Seq("doc_id"), "left_anti")
+    LshProbe(batch.select(col(idCol).as("doc_id"))
+      .join(rejected, Seq("doc_id"), "left_anti"), views)
   }
 
   /** Materialize the existing-corpus LSH artifacts to durable storage:
@@ -607,43 +593,30 @@ object Dedup {
     * (Jaccard verification input). This is the write-once index the
     * stored-ingest path ([[lshNewDocsAgainstIndex]]) probes — the shape
     * that makes incremental near-dedup O(batch) instead of O(corpus)
-    * per ingest. One shingle-derivation pass feeds both files. */
+    * per ingest. One shingle-derivation pass ([[lshViews]]) feeds both
+    * files, which come out doc-clustered. */
   def writeLshIndex(docs: DataFrame, idCol: String, textCol: String,
                     dir: String): Unit = {
-    // Cluster the corpus by doc id BEFORE shingling (one linear shuffle of
-    // doc rows — ~3x smaller than their shingle rows): the explode
-    // preserves the hash partitioning, so the signature aggregate's
-    // groupBy(id) is satisfied without a second exchange AND the stored
-    // files come out doc-clustered — the layout the sf1 rehearsal showed
-    // restores map-side collapse at any corpus size (SCALE.md "sf1.0
-    // rehearsal": scattered doc ids grew the signature-stage shuffle ~45x
-    // for 10x docs).
-    val sh = graft.util.Views.materialize(
-      shingleRows(docs.repartition(col(idCol)), idCol, textCol))
-    bandRowsFromShingles(sh).write.mode("overwrite").parquet(s"$dir/bands")
-    sh.write.mode("overwrite").parquet(s"$dir/shingles")
+    val rows = lshViews(docs, idCol, textCol)
+    rows.bands.write.mode("overwrite").parquet(s"$dir/bands")
+    rows.shingles.write.mode("overwrite").parquet(s"$dir/shingles")
   }
 
-  /** APPEND a batch's artifacts to an existing [[writeLshIndex]] index —
+  /** APPEND documents' index rows to an existing [[writeLshIndex]] index —
     * the steady-state index evolution of an ingest pipeline: each
     * accepted batch's bands/shingles join the index so LATER batches
     * near-dedup against it; the index is never rebuilt. (Parquet append
     * = new files alongside old; at 100 TB this is the same
     * partition-append every warehouse sink does.)
     *
-    * The rows come from the `probe` that judged the batch: its band and
-    * shingle views, kept to the `survivors`' `idCol` values — exactly
-    * the rows [[writeLshIndex]] would derive for those documents, with
-    * no second shingling or minhash pass. `bands` is written before
-    * `shingles`, so `shingles` is the last-written table, the one a
-    * replay is adjudicated against. */
-  def appendLshIndex(probe: LshProbe, survivors: DataFrame, idCol: String,
-                     dir: String): Unit = {
-    val ids = broadcast(survivors.select(col(idCol).as("id")))
-    probe.bands.join(ids, Seq("id"), "left_semi")
-      .write.mode("append").parquet(s"$dir/bands")
-    probe.shingles.join(ids, Seq("id"), "left_semi")
-      .write.mode("append").parquet(s"$dir/shingles")
+    * `rows` are written as given: an ingest passes its probe's views
+    * kept to the survivors (`probe.batch.of(ids)`), exactly the rows
+    * [[writeLshIndex]] would derive for those documents. `bands` is
+    * written before `shingles`, so `shingles` is the last-written table,
+    * the one a replay is adjudicated against. */
+  def appendLshIndex(rows: LshViews, dir: String): Unit = {
+    rows.bands.write.mode("append").parquet(s"$dir/bands")
+    rows.shingles.write.mode("append").parquet(s"$dir/shingles")
   }
 
   /** (band index, shingle store) readers for a [[writeLshIndex]] dir,
@@ -663,7 +636,7 @@ object Dedup {
     * partials; the fix is to WRITE the shingle view clustered by doc id
     * and feed the signature aggregate from that layout).
     *
-    * Both artifacts become warehouse tables `bucketBy(numBuckets, id)`,
+    * Both artifacts become warehouse tables `bucketBy(IndexBuckets, id)`,
     * sorted by id:
     *  1. the shingle store is written first, after ONE linear
     *     doc-clustering shuffle — paid on doc rows (~3x smaller than
@@ -675,16 +648,27 @@ object Dedup {
     *     signature stage ships ZERO shuffle bytes at any corpus size
     *     (LshIndexSpec pins the plan; SCALE.md records the sf0.1/sf1 A/B);
     *  3. the band index inherits the scan's partitioning through the
-    *     aggregate, so its bucketed write is exchange-free too.
+    *     aggregate, so its bucketed write is exchange-free too;
+    *  4. the shingle dictionary and the encoded rows
+    *     ([[writeShingleDict]]).
     * Probe-time id-keyed consumers (per-doc counts, candidate-id
     * semi-joins) cluster on the stored side's distribution for free. */
   def writeLshIndexBucketed(docs: DataFrame, idCol: String, textCol: String,
-                            base: String,
-                            numBuckets: Int = IndexBuckets): Unit = {
-    writeShingleStore(docs, idCol, textCol, base, numBuckets, bucketed = true)
-    writeBandIndex(docs.sparkSession, base, numBuckets, bucketed = true)
-    writeShingleDict(docs.sparkSession, base, numBuckets)
+                            base: String): Unit = {
+    val spark = docs.sparkSession
+    saveBucketed(shingleRows(docs.repartition(IndexBuckets, col(idCol)), idCol, textCol),
+      "overwrite", "id", s"${base}_shingles")
+    saveBucketed(bandRowsFromShingles(spark.table(s"${base}_shingles")),
+      "overwrite", "id", s"${base}_bands")
+    writeShingleDict(spark, base)
   }
+
+  /** Writes `df` as warehouse table `table`, bucketed and sorted by `key`
+    * into [[IndexBuckets]] buckets. */
+  private def saveBucketed(df: DataFrame, mode: String, key: String,
+                           table: String): Unit =
+    df.write.mode(mode).bucketBy(IndexBuckets, key).sortBy(key)
+      .format("parquet").saveAsTable(table)
 
   /** Deterministic DENSE ids for the distinct values in `df`'s column
     * `c`: sid = the value's 0-based rank in global binary sort order —
@@ -705,50 +689,49 @@ object Dedup {
       .toDF(c, "sid")
   }
 
-  /** Build steps 3-4 — the SHINGLE DICTIONARY tier (round 11, VERDICT
-    * r10 task #1):
-    *  3. `<base>_dict` (sh, sid): deterministic dense ids over the
-    *     store's distinct shingles ([[denseIds]]), bucketed by `sh` so
-    *     probe-time batch encoding joins it exchange-free on the dict
-    *     side;
-    *  4. `<base>_shids` (id, sid): the shingle store re-keyed through
-    *     the dictionary, bucketed by `id` — the VERIFICATION input.
-    *     Jaccard verification never touches shingle text again: every
-    *     (id_b, sh)-keyed join ships 8-byte sids where the raw trigram
-    *     averages ~25 bytes (sf10 measured the strings as the dominant
-    *     probe shuffle — 1 074/1 108 MB).
+  /** The SHINGLE DICTIONARY tier (round 11, VERDICT r10 task #1):
+    *  - `<base>_dict` (sh, sid): deterministic dense ids over the
+    *    store's distinct shingles ([[denseIds]]), bucketed by `sh` so
+    *    probe-time batch encoding joins it exchange-free on the dict
+    *    side;
+    *  - `<base>_shids` (id, sid): the shingle store re-keyed through
+    *    the dictionary, bucketed by `id` — the VERIFICATION input.
+    *    Jaccard verification never touches shingle text again: every
+    *    (id_b, sh)-keyed join ships 8-byte sids where the raw trigram
+    *    averages ~25 bytes (sf10 measured the strings as the dominant
+    *    probe shuffle — 1 074/1 108 MB).
     * The string store (`<base>_shingles`) remains the minhash BUILD
     * input (band keys hash the text) and stays exchange-free to write;
     * the dictionary pays one distinct + sort + one by-sh join of the
     * store — linear one-time build cost, amortized over every probe. */
-  private[graft] def writeShingleDict(spark: org.apache.spark.sql.SparkSession,
-                                      base: String, numBuckets: Int): Unit = {
+  private def writeShingleDict(spark: org.apache.spark.sql.SparkSession,
+                               base: String): Unit = {
     val sh = spark.table(s"${base}_shingles")
-    denseIds(sh.select("sh"), "sh")
-      .repartition(numBuckets, col("sh"))
-      .write.mode("overwrite").bucketBy(numBuckets, "sh").sortBy("sh")
-      .format("parquet").saveAsTable(s"${base}_dict")
-    sh.join(spark.table(s"${base}_dict"), "sh")
-      .select(col("id"), col("sid"))
-      .repartition(numBuckets, col("id"))
-      .write.mode("overwrite").bucketBy(numBuckets, "id").sortBy("id")
-      .format("parquet").saveAsTable(s"${base}_shids")
+    saveBucketed(denseIds(sh.select("sh"), "sh").repartition(IndexBuckets, col("sh")),
+      "overwrite", "sh", s"${base}_dict")
+    saveBucketed(sh.join(spark.table(s"${base}_dict"), "sh")
+        .select(col("id"), col("sid"))
+        .repartition(IndexBuckets, col("id")),
+      "overwrite", "id", s"${base}_shids")
     // Seed the max-sid counter: sids are dense 0..n-1, so n-1 comes from
     // a footer-only count-star of the freshly written dict.
     writeMaxSid(spark, base, spark.table(s"${base}_dict").count() - 1)
   }
 
-  /** APPEND a batch to a [[writeLshIndexBucketed]] index — the bucketed
+  /** APPEND documents to a [[writeLshIndexBucketed]] index — the bucketed
     * tier's evolution path (round 11), completing what [[appendLshIndex]]
-    * does for the plain-dir tier: each accepted batch's shingles, bands,
-    * dictionary EXTENSION, and encoded rows join the four tables so
+    * does for the plain-dir tier: the `rows`' shingles and bands, the
+    * dictionary EXTENSION, and the encoded rows join the four tables so
     * later batches probe everything accepted so far; the index is never
-    * rebuilt. Appending to a bucketed `saveAsTable` adds one file set
-    * per (batch, bucket) carrying the bucket ids in the file names, so
-    * every exchange-free property of the scans survives (spec-pinned);
-    * small-file growth is bounded by periodic re-bucketing rebuild —
-    * [[graft.util.Maintenance.compactInPlace]] must NOT touch bucketed
-    * tables (a plain rewrite would strip the bucket-id file naming).
+    * rebuilt. `rows` are written as given (an ingest passes its probe's
+    * views kept to the survivors; a direct caller passes
+    * [[lshViews]] of its documents). Appending to a bucketed `saveAsTable`
+    * adds one file set per (batch, bucket) carrying the bucket ids in the
+    * file names, so every exchange-free property of the scans survives
+    * (spec-pinned); small-file growth is bounded by periodic re-bucketing
+    * rebuild — [[graft.util.Maintenance.compactInPlace]] must NOT touch
+    * bucketed tables (a plain rewrite would strip the bucket-id file
+    * naming).
     *
     * Dictionary extension: batch-NEW shingles get sids
     * `maxSid + 1 + rank-in-sorted-order` ([[denseIds]]) — the dict stays
@@ -764,18 +747,14 @@ object Dedup {
     * protection (the streaming wrapper marker-gates per batch and
     * adjudicates the crash window exactly like [[appendLshIndex]]'s
     * wrapper). */
-  def appendLshIndexBucketed(docs: DataFrame, base: String,
-                             idCol: String, textCol: String,
-                             numBuckets: Int = IndexBuckets): Unit = {
-    val spark = docs.sparkSession
-    val shB = graft.util.Views.materialize(
-      shingleRows(docs.repartition(numBuckets, col(idCol)), idCol, textCol))
-    def appendBucketed(df: DataFrame, part: String, key: String): Unit =
-      df.repartition(numBuckets, col(key))
-        .write.mode("append").bucketBy(numBuckets, key).sortBy(key)
-        .format("parquet").saveAsTable(s"${base}_$part")
-    appendBucketed(shB, "shingles", "id")
-    appendBucketed(bandRowsFromShingles(shB), "bands", "id")
+  def appendLshIndexBucketed(rows: LshViews, base: String): Unit = {
+    val spark = rows.shingles.sparkSession
+    val shB = rows.shingles
+    def append(df: DataFrame, part: String, key: String): Unit =
+      saveBucketed(df.repartition(IndexBuckets, col(key)), "append", key,
+        s"${base}_$part")
+    append(shB, "shingles", "id")
+    append(rows.bands, "bands", "id")
     // IMMUTABLE SNAPSHOT of the pre-append dictionary, by explicit file
     // list: a `spark.table` read is a live view, not a snapshot — a
     // cache-evicted recompute after the dict append below would re-list
@@ -791,8 +770,8 @@ object Dedup {
     val maxSid = readMaxSid(spark, base).getOrElse(
       dictPre.agg(coalesce(max("sid"), lit(-1L))).head().getLong(0))
     // Lineage severed (eager localCheckpoint): the extension must stay
-    // immutable bytes across its two consumers even if shB's cache
-    // evicts mid-call.
+    // immutable bytes across its two consumers even if the shingle
+    // view's cache evicts mid-call.
     val newDict = denseIds(
         shB.select("sh").join(dictPre.select("sh"), Seq("sh"), "left_anti"), "sh")
       .select(col("sh"), (col("sid") + lit(maxSid + 1)).as("sid"))
@@ -815,8 +794,8 @@ object Dedup {
     // count is a driver-side sum over batch-sized bytes.
     val nNew = newDict.count()
     writeMaxSid(spark, base, maxSid + nNew)
-    appendBucketed(newDict, "dict", "sh")
-    appendBucketed(
+    append(newDict, "dict", "sh")
+    append(
       shB.join(dictPre, "sh").select(col("id"), col("sid"))
         .unionByName(shB.join(newDict, "sh").select(col("id"), col("sid"))),
       "shids", "id")
@@ -879,34 +858,6 @@ object Dedup {
     try os.write(v.toString.getBytes("UTF-8")) finally os.close()
   }
 
-  /** Build step 1: the shingle store table. `bucketed = true` pays the one
-    * linear doc-clustering shuffle and writes `bucketBy(id)`;
-    * `bucketed = false` reproduces the legacy scattered layout (kept for
-    * the scale A/B — graft.IndexBench). */
-  private[graft] def writeShingleStore(docs: DataFrame, idCol: String,
-                                       textCol: String, base: String,
-                                       numBuckets: Int,
-                                       bucketed: Boolean): Unit = {
-    val in = if (bucketed) docs.repartition(numBuckets, col(idCol)) else docs
-    val w = shingleRows(in, idCol, textCol).write.mode("overwrite")
-    (if (bucketed) w.bucketBy(numBuckets, "id").sortBy("id") else w)
-      .format("parquet").saveAsTable(s"${base}_shingles")
-  }
-
-  /** Build step 2 — THE SIGNATURE STAGE: minhash signatures + band keys
-    * aggregated per doc from the stored shingle layout. Over a bucketed
-    * store this plans no exchange; over a scattered store it ships the
-    * per-doc partials the sf1 rehearsal measured growing ~45x for 10x
-    * docs. */
-  private[graft] def writeBandIndex(spark: org.apache.spark.sql.SparkSession,
-                                    base: String, numBuckets: Int,
-                                    bucketed: Boolean): Unit = {
-    val w = bandRowsFromShingles(spark.table(s"${base}_shingles"))
-      .write.mode("overwrite")
-    (if (bucketed) w.bucketBy(numBuckets, "id").sortBy("id") else w)
-      .format("parquet").saveAsTable(s"${base}_bands")
-  }
-
   /** (band index, shingle store) readers for a [[writeLshIndexBucketed]]
     * table base — catalog reads, so the scans carry the bucket spec and
     * downstream id-keyed stages skip their exchanges. */
@@ -945,7 +896,7 @@ object Dedup {
                                      variant: String): String =
     ensureLshTablesImpl(spark, dir, variant, tagExtra = "|apnd=v1", base => {
       writeLshIndexBucketed(corpus0, idCol, textCol, base)
-      appendLshIndexBucketed(corpusAppend, base, idCol, textCol)
+      appendLshIndexBucketed(lshViews(corpusAppend, idCol, textCol), base)
     })
 
   private def ensureLshTablesImpl(spark: org.apache.spark.sql.SparkSession,
@@ -1000,13 +951,10 @@ object Dedup {
     // shingle view once, reuse it across the LSH stages). Candidates feed
     // the id restriction AND the final semi-join; materialize both so no
     // concurrent stage recomputes them (see [[graft.util.Views]]).
-    val shAll = graft.util.Views.materializeTruncated(
-      shingleRowsClustered(docs, idCol, textCol))
+    val shAll = shingleView(docs, idCol, textCol)
     val cand = graft.util.Views.materializeTruncated(
       lshCandidatesFromShingles(shAll, bucketCap, numHashes, numBands))
-    val sh = graft.util.Views.materializeTruncated(
-      shAll.join(candidateIds(cand), "id"))
-    jaccardForPairs(cand, sh, threshold)
+    jaccardForCandidates(cand, shAll, threshold)
   }
 
   /** CORPUS SELF-DEDUP through the PUBLISHED index — the production
@@ -1041,9 +989,7 @@ object Dedup {
     val shE = spark.table(s"${base}_shids").select(col("id"), col("sid").as("sh"))
     val cand = graft.util.Views.materializeTruncated(
       lshCandidatesFromBands(bandE, bucketCap))
-    val sh = graft.util.Views.materializeTruncated(
-      shE.join(candidateIds(cand), "id"))
-    jaccardForPairs(cand, sh, threshold)
+    jaccardForCandidates(cand, shE, threshold)
   }
 
   /** Benchmark DECONTAMINATION scan — the train/eval overlap check every

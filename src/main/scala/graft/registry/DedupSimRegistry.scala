@@ -382,7 +382,7 @@ private[graft] object DedupSimRegistry {
       // Round 11 (VERDICT r10 task #1): corpus-partner verification
       // joins on the published shingle DICTIONARY ids, batch-vs-batch
       // stays on batch-local strings (the split shape — see
-      // lshNewDocsAgainstIndexEncoded's scaladoc for the measured sf10
+      // Dedup.lshProbeEncoded's scaladoc for the measured sf10
       // A/B: 29.6 s flat vs 33.9 s for the all-string probe on the same
       // host). Same verdicts; same oracle as the in-query twin.
       dedup.Dedup.lshNewDocsAgainstIndexEncoded(docs.filter(isBatch), base,

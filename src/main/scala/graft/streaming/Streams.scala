@@ -285,7 +285,8 @@ object Streams {
       indexGated(b, "nearDupIngest", "doc_id", marker,
         Seq("shingles" -> shE.select("id")),
         probe.survivorIds,
-        graft.dedup.Dedup.appendLshIndex(probe, _, "doc_id", indexDir),
+        s => graft.dedup.Dedup.appendLshIndex(
+          probe.batch.of(s.select("doc_id")), indexDir),
         appendToIndex, selfHeal)(emit)
     } { batchId =>
       if (appendToIndex && compactEvery > 0 && (batchId + 1) % compactEvery == 0)
@@ -297,48 +298,46 @@ object Streams {
   /** [[nearDupIngest]] over the BUCKETED, DICTIONARY-ENCODED index tier
     * (round 11) — the unification of the streaming ingest with the
     * batch stored tier (`dedup_incremental_lsh_stored`): each
-    * micro-batch probes the four warehouse tables via
-    * [[graft.dedup.Dedup.lshNewDocsAgainstIndexEncoded]] (corpus-partner
-    * verification on 8-byte sids) and, with `appendToIndex=true`,
-    * survivors fold in through
+    * micro-batch is judged by [[graft.dedup.Dedup.lshProbeEncoded]],
+    * which reads `bands`, `dict` and `shids` (corpus-partner
+    * verification on 8-byte sids), and, with `appendToIndex=true`, the
+    * survivors' rows from that probe's own views fold in through
     * [[graft.dedup.Dedup.appendLshIndexBucketed]] — shingles, bands,
-    * dict extension, encoded rows — so the id-bucketed exchange-free
-    * probe plan survives every append. Replay safety is
-    * [[markedBatches]] + [[indexGated]], adjudicated against the FIRST-
-    * and LAST-written tables: `appendLshIndexBucketed` commits `shingles`
-    * first and the encoded `shids` rows last, so present-in-both proves
-    * the whole four-table append applied, and any other mix is loud
-    * (`shids` alone would let a replay silently skip a batch whose dict
+    * dict extension, encoded rows — so no document is shingled or
+    * minhashed twice and the id-bucketed exchange-free probe plan
+    * survives every append. Replay safety is [[markedBatches]] +
+    * [[indexGated]], adjudicated against the FIRST- and LAST-written
+    * tables: `appendLshIndexBucketed` commits `shingles` first and the
+    * encoded `shids` rows last, so present-in-both proves the whole
+    * four-table append applied, and any other mix is loud (`shids`
+    * alone would let a replay silently skip a batch whose dict
     * extension never committed). Same shingle-less-doc caveat as
-    * [[nearDupIngest]]. `base` is a table
-    * base from [[graft.dedup.Dedup.writeLshIndexBucketed]] — NOT one
-    * produced by the marker-gated ensure for registry queries, whose
-    * write-once contract an appending stream would violate.
+    * [[nearDupIngest]]. `base` is a table base from
+    * [[graft.dedup.Dedup.writeLshIndexBucketed]] — NOT one produced by
+    * the marker-gated ensure for registry queries, whose write-once
+    * contract an appending stream would violate.
     *
     * No `compactEvery` here BY DESIGN: [[graft.util.Maintenance
     * .compactInPlace]]'s plain rewrite would strip the bucket-id file
-    * naming and silently break the bucketed scans (it now REFUSES these
-    * dirs); the bucketed tier's small-file maintenance is the
-    * FRAGMENTATION-TRIGGERED auto-rebucket (round 13, VERDICT r12 #4 —
-    * superseding round 12's caller-supplied every-N-batches cadence):
-    * after each applied append, if any of the four tables reaches
-    * `rebucketFilesPerBucket` data files per bucket ([[graft.util
-    * .Maintenance.filesPerBucket]]), all four are rewritten through
-    * [[graft.util.Maintenance.rebucketTable]]'s spec-preserving staging
-    * swap, collapsing the one-file-set-per-(batch, bucket) growth back
-    * to ~bucket count while keeping every exchange-free scan property
-    * and the replay markers (content is row-identical and aux files are
-    * carried through the swap). The threshold is MEASURED, not guessed:
+    * naming and silently break the bucketed scans (it REFUSES these
+    * dirs). The bucketed tier's small-file maintenance is a
+    * FRAGMENTATION-TRIGGERED rebucket: after each applied append, if any
+    * of the four tables reaches `rebucketFilesPerBucket` data files per
+    * bucket ([[graft.util.Maintenance.filesPerBucket]]), all four are
+    * rewritten through [[graft.util.Maintenance.rebucketTable]]'s
+    * spec-preserving staging swap, collapsing the one-file-set-per-
+    * (batch, bucket) growth back to ~bucket count while keeping every
+    * exchange-free scan property and the replay markers (content is
+    * row-identical and aux files are carried through the swap).
     * [[graft.util.Maintenance.DefaultRebucketFilesPerBucket]] carries
     * the RebucketBench-derived break-even (~10 files/bucket; see its
-    * scaladoc for the arithmetic), and the trigger metric means sparse
-    * appends — which touch few buckets — defer maintenance the batch
-    * counter would have fired early. Runs on the foreachBatch thread:
+    * scaladoc for the arithmetic); sparse appends, which touch few
+    * buckets, defer maintenance. Runs on the foreachBatch thread:
     * serialized with appends, never racing an in-flight micro-batch.
     * When enabled, batch entry also runs [[graft.util.Maintenance
     * .recoverTable]] over the four tables, so a crash mid-swap heals on
     * stream restart instead of failing every adjudication read until a
-    * manual recovery (ADVICE r12). 0 disables both. */
+    * manual recovery. 0 disables both. */
   def nearDupIngestBucketed(docs: DataFrame, base: String, threshold: Double,
                             appendToIndex: Boolean = false,
                             checkpointLocation: Option[String] = None,
@@ -365,13 +364,17 @@ object Streams {
       // out the encode join).
       val bs = b.sparkSession
       tables.foreach(bs.catalog.refreshTable)
+      // Lazy, as in nearDupIngest: probed after adjudication, and the
+      // append writes the survivors' rows from the probe's views.
+      lazy val probe = graft.dedup.Dedup.lshProbeEncoded(
+        b, base, "doc_id", "text", threshold,
+        guardDisjoint = false) // adjudicated against the same table
       indexGated(b, "nearDupIngestBucketed", "doc_id", marker,
         Seq("shingles", "shids").map(p => p -> bs.table(s"${base}_$p").select("id")),
-        graft.dedup.Dedup.lshNewDocsAgainstIndexEncoded(
-          b, base, "doc_id", "text", threshold,
-          guardDisjoint = false), // adjudicated against the same table
+        probe.survivorIds,
         { survivors =>
-          graft.dedup.Dedup.appendLshIndexBucketed(survivors, base, "doc_id", "text")
+          graft.dedup.Dedup.appendLshIndexBucketed(
+            probe.batch.of(survivors.select("doc_id")), base)
           // Invalidate the OUTER session's cached relations so readers
           // outside the stream see the appended files (any OTHER session
           // still owns its own REFRESH TABLE).

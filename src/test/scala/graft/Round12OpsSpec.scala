@@ -148,7 +148,8 @@ class Round12OpsSpec extends SparkSpec {
       assert(dedup.Dedup.readMaxSid(spark, base) === Some(dictMax()))
       dense()
       // Append extends the counter in lockstep with the dict.
-      dedup.Dedup.appendLshIndexBucketed(part2, base, "doc_id", "text")
+      dedup.Dedup.appendLshIndexBucketed(
+        dedup.Dedup.lshViews(part2, "doc_id", "text"), base)
       spark.catalog.refreshTable(s"${base}_dict")
       assert(dedup.Dedup.readMaxSid(spark, base) === Some(dictMax()))
       dense()
@@ -166,7 +167,8 @@ class Round12OpsSpec extends SparkSpec {
       val extra = spark.range(1).select(
         lit(990000L).as("doc_id"),
         lit("zq unique legacy fallback shingle text row").as("text"))
-      dedup.Dedup.appendLshIndexBucketed(extra, base, "doc_id", "text")
+      dedup.Dedup.appendLshIndexBucketed(
+        dedup.Dedup.lshViews(extra, "doc_id", "text"), base)
       spark.catalog.refreshTable(s"${base}_dict")
       assert(dedup.Dedup.readMaxSid(spark, base) === Some(dictMax()))
       dense()

@@ -45,7 +45,8 @@ class Round13OpsSpec extends SparkSpec {
       // LOST, never reused.
       dedup.Dedup.writeMaxSid(spark, base, m0 + 7)
       // Life goes on: the next batch appends normally.
-      dedup.Dedup.appendLshIndexBucketed(part2, base, "doc_id", "text")
+      dedup.Dedup.appendLshIndexBucketed(
+        dedup.Dedup.lshViews(part2, "doc_id", "text"), base)
       Seq("shingles", "bands", "dict", "shids").foreach(p =>
         spark.catalog.refreshTable(s"${base}_$p"))
       val d = spark.table(s"${base}_dict")

@@ -52,6 +52,22 @@ class SourceLintSpec extends AnyFunSuite {
     assert(bad.isEmpty, s"SparkSession.builder() outside GraftSession in: ${bad.mkString(", ")}")
   }
 
+  private def occurrences(pattern: String): Seq[(String, Int)] =
+    sources.map { case (rel, code) => rel -> pattern.r.findAllIn(code).size }
+      .filter(_._2 > 0)
+
+  test("the Jaccard ratio is written once, in Dedup's verification kernel") {
+    val found = occurrences(
+      "col\\(\"n_common\"\\)\\s*/\\s*\\(\\s*col\\(\"n_a\"\\)\\s*\\+\\s*col\\(\"n_b\"\\)\\s*-\\s*col\\(\"n_common\"\\)\\s*\\)")
+    assert(found === Seq("graft/dedup/Dedup.scala" -> 1), s"Jaccard ratio written in: $found")
+  }
+
+  test("Dedup's id-disjointness guard is written once") {
+    val n = occurrences("\"left_semi\"\\s*\\)\\s*\\.\\s*isEmpty")
+      .collectFirst { case ("graft/dedup/Dedup.scala", k) => k }.getOrElse(0)
+    assert(n === 1, s"Dedup writes the left_semi-isEmpty guard $n times, expected once")
+  }
+
   private val streams = "graft/streaming/Streams.scala"
   private lazy val streamsCode = sources.collectFirst { case (`streams`, c) => c }.get
 

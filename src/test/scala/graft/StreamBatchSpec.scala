@@ -222,31 +222,35 @@ class StreamBatchSpec extends SparkSpec {
     }
   }
 
-  /** The job ceiling of one `nearDupIngest` micro-batch with appends on:
-    * one adjudication aggregate, the probe's forced views, the survivors,
-    * the append of `bands` then `shingles` from the probe's views, and
-    * the batch read itself. A re-derivation of the batch's shingles or
-    * bands, or a second forcing action per view, pushes it over. */
-  test("nearDupIngest runs one micro-batch within its job budget") {
-    val dir = tmp("graft_sb_jobs")
-    dedup.Dedup.writeLshIndex(existingDocs, "doc_id", "text", dir)
-    val (s, feed) = docStream()
-    var survivors = Set.empty[Long]
-    val q = Streams.nearDupIngest(s.toDF(), dir, 0.6, appendToIndex = true) { surv =>
-      survivors = surv.select("doc_id").collect().map(_.getLong(0)).toSet
+  /** The job ceiling of one near-dup micro-batch with appends on: one
+    * adjudication aggregate, the probe's forced views, the survivors,
+    * the append from the probe's views, and the batch read itself. A
+    * re-derivation of the batch's shingles or bands, or a second forcing
+    * action per view, pushes it over. The bucketed ingest also reads the
+    * dictionary snapshot and extends the dictionary (dense-id sort,
+    * zipWithIndex, checkpoint) before its four bucketed appends. */
+  Seq("nearDupIngest" -> 38, "nearDupIngestBucketed" -> 80).foreach { case (name, budget) =>
+    val in = ingests.find(_.name == name).get
+    test(s"$name runs one micro-batch within its job budget") {
+      try {
+        in.build()
+        var survivors = Set.empty[Long]
+        val (q, feed) = in.start(None,
+          surv => survivors = surv.select("doc_id").collect().map(_.getLong(0)).toSet)
+        val (_, jobs) = try new JobProbe(spark).jobsDuring {
+          feed(Seq(99L, 100L, 101L)); q.processAllAvailable()
+        } finally q.stop()
+        // 101 repeats doc 1's text: rejected; the two fresh docs survive
+        // and are appended.
+        assert(survivors === Set(99L, 100L))
+        val n = jobs.count(_.getProperty(
+          org.apache.spark.sql.execution.streaming.runtime.StreamExecution.QUERY_ID_KEY) ==
+          q.id.toString)
+        assert(n > 0, "no job carried the stream's query id")
+        info(s"$n jobs in the micro-batch")
+        assert(n <= budget)
+      } finally in.cleanup()
     }
-    val (_, jobs) = try new JobProbe(spark).jobsDuring {
-      feed(Seq(99L, 100L, 101L)); q.processAllAvailable()
-    } finally q.stop()
-    // 101 repeats doc 1's text: rejected; the two fresh docs survive and
-    // are appended.
-    assert(survivors === Set(99L, 100L))
-    val n = jobs.count(_.getProperty(
-      org.apache.spark.sql.execution.streaming.runtime.StreamExecution.QUERY_ID_KEY) ==
-      q.id.toString)
-    assert(n > 0, "no job carried the stream's query id")
-    info(s"$n jobs in the micro-batch")
-    assert(n <= 38)
   }
 
   private val DayNs = 86400000000000L

@@ -351,10 +351,28 @@ class StreamingSpec extends SparkSpec {
     assert(dict.select("sid").distinct().count() === n)
     assert(dict.select("sh").distinct().count() === n)
     assert(shids.count() === spark.table(s"${base}_shingles").count())
+    // `shingles` and `bands` hold, as bags of rows, what one
+    // writeLshIndexBucketed of the corpus plus the accepted docs writes,
+    // and `shids` decodes through `dict` to exactly `shingles`.
+    val refBase = "graft_test_ndbkt_ref"
+    Seq("shingles", "bands", "dict", "shids").foreach(p =>
+      EntryOps.dropManagedTable(spark, s"${refBase}_$p"))
+    dedup.Dedup.writeLshIndexBucketed(existing.select("doc_id", "text").unionByName(
+      mb1Df.unionByName(mb2Df).filter(col("doc_id").isin((s1 ++ s2).toSeq: _*))),
+      "doc_id", "text", refBase)
+    def sameBag(t: String, got: org.apache.spark.sql.DataFrame,
+                want: org.apache.spark.sql.DataFrame): Unit = {
+      assert(got.count() === want.count(), t)
+      assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty, t)
+    }
+    Seq("shingles", "bands").foreach(p =>
+      sameBag(p, spark.table(s"${base}_$p"), spark.table(s"${refBase}_$p")))
+    sameBag("shids decoded", shids.join(dict, "sid").select("id", "sh"),
+      spark.table(s"${base}_shingles"))
     // One replay marker per processed micro-batch.
     assert(batchesDir.listFiles().count(f => !f.getName.startsWith(".")) === 2)
-    Seq("shingles", "bands", "dict", "shids").foreach(p =>
-      EntryOps.dropManagedTable(spark, s"${base}_$p"))
+    Seq(base, refBase).foreach(b => Seq("shingles", "bands", "dict", "shids")
+      .foreach(p => EntryOps.dropManagedTable(spark, s"${b}_$p")))
   }
 
   test("nearDupIngest replay safety: full-overlap self-heals, partial overlap fails loudly") {
